@@ -82,25 +82,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // r19 (guide §2.2 "fewer, larger partitions" applied to caches):
-        // lets AQE coalesce the MATERIALIZATION of persisted frames like
-        // any other stage output. Off by default only to keep cached
-        // output partitioning stable for consumers that depend on it —
-        // none here do — and without it every within-query persist (q44
-        // sh, q55 subs, q66 spans, the rank-recipe inputs) materializes
-        // at the raw shuffle-partition count and every consumer launches
-        // that many near-empty tasks (q118: 336 tasks → 26). Holds at
-        // any core count / cluster size; same flag set in Verify so the
-        // correctness path runs the identical plan shape.
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .getOrCreate()
+      val s = Session.builder("graft-bench").getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       // untimed warmup: session/codegen/file-index initialization otherwise
       // lands on whichever query happens to run first (or on the first
@@ -110,11 +93,11 @@ object Bench {
       try SparkEntry.entry(s).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
       // r18: also warm the Tables schema cache for THIS run's data dir —
-      // schema inference (listing + footer reads) is ~0.16 s/table
-      // (tools/ReadFloor) and per-session first-touch otherwise lands in
-      // whichever query reads the table first, exactly the class of init
-      // cost this warmup exists to keep out of the timed cells. Metadata
-      // only: no row is read, no result computed.
+      // schema inference (listing + footer reads) is ~0.16 s/table and
+      // per-session first-touch otherwise lands in whichever query reads
+      // the table first, exactly the class of init cost this warmup
+      // exists to keep out of the timed cells. Metadata only: no row is
+      // read, no result computed.
       // per-table try (ADVICE r18): one missing table must not abort
       // warming for the rest — that would put inference cost back into
       // the first timed cell that reads a later table

@@ -772,17 +772,7 @@ object Main {
       "usage: graft.Main <data-config.yaml> " +
         "<cache|serve|explore|predict|dedup|split|score|ingest|decontaminate|annbuild|annsearch|compact|upsert|snapshot|timetravel|cdc|vacuum|merge|forget|gate>" +
         " (dedupappend also takes --resume)")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      // Tables.events (and every timestamp reader) assumes a UTC session;
-      // this is the one session-constructing entry point that doesn't go
-      // through Session/Verify/Bench's builders, so pin it here too
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val command = if (args.length == 3) "dedupappend-resume" else args(1)
     try run(spark, args(0), command).toSeq.sortBy(_._1)

@@ -17,8 +17,8 @@ object Tables {
     *
     * r18 (guide §1.2/§6): every `spark.read.parquet(path)` call pays
     * schema inference — listing + footer reads + merge, measured at
-    * ~0.16 s warm per call on the sf0.1 tables (tools/ReadFloor: 0.178 s
-    * inferred vs 0.021 s with an explicit schema) — and the bench
+    * ~0.16 s warm per call on the sf0.1 tables (0.178 s inferred vs
+    * 0.021 s with an explicit schema) — and the bench
     * constructs ~2 table reads per query × 141 queries × reps, so
     * inference alone was tens of seconds of pure fixed floor. The cache
     * holds ONLY the inferred StructType (never rows, never results) and
@@ -64,17 +64,16 @@ object Tables {
     *    DuckDB's view of the same instants for post-1970 data.
     *  - timestamp[us] WITHOUT timezone: Spark 4 infers TIMESTAMP_NTZ, which
     *    rejects `cast(double)`; cast to TIMESTAMP — under the engine's
-    *    mandated UTC session timezone (Session.tune/Verify/Bench/specs)
+    *    mandated UTC session timezone (set by graft.Session)
     *    this reads the naive value as the same UTC instant DuckDB sees.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // the TIMESTAMP_NTZ→TIMESTAMP cast below reads naive micros under the
-    // SESSION timezone: every engine entry point (Session.tune, Verify,
-    // Bench, specs) pins it to UTC at session construction. A reader must
-    // not mutate session config behind the user's back, so only WARN when
-    // an entry point forgot the pin — shifted instants would otherwise be
-    // silent.
+    // SESSION timezone: graft.Session, which builds every engine session,
+    // pins it to UTC at session construction. A reader must not mutate
+    // session config behind the user's back, so only WARN when a session
+    // lacks the pin — shifted instants would otherwise be silent.
     if (spark.conf.get("spark.sql.session.timeZone") != "UTC")
       System.err.println(
         "[graft] WARNING: events() read under non-UTC session timezone " +

@@ -1,45 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // GRAFT_VERIFY_MASTER=local-cluster[2,2,2048] (VERDICT r16 item 3):
-    // run the WHOLE declared suite on a real multi-process standalone
-    // master — separate executor JVMs, isLocal=false — so every custom
-    // Aggregator buffer encoder, codegen expression, and broadcast
-    // crosses a real executor boundary (single-JVM local[*] cannot
-    // surface serialization bugs). Executors are fresh JVMs and need
-    // this (forked-run) JVM's classpath plus the JDK-17 add-opens that
-    // spark-submit would inject; the invoking shell must set
-    // SPARK_SCALA_VERSION=2.13 SPARK_HOME=/opt/spark for the worker's
-    // ExecutorRunner (same recipe as LocalClusterCkptSpec).
-    val master = sys.env.getOrElse("GRAFT_VERIFY_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // mirror Bench's cached-plan AQE flag so correctness runs the same
-      // plan shape the bench times (see Bench.newSession)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    if (master.startsWith("local-cluster")) {
-      builder
-        .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-        .config("spark.executor.extraJavaOptions", Seq(
-          "java.base/java.lang", "java.base/java.lang.invoke",
-          "java.base/java.lang.reflect", "java.base/java.io",
-          "java.base/java.net", "java.base/java.nio",
-          "java.base/java.util", "java.base/java.util.concurrent",
-          "java.base/java.util.concurrent.atomic",
-          "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-          "java.base/sun.security.action", "java.base/sun.util.calendar")
-          .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" "))
-    }
-    val spark = builder.getOrCreate()
+    // SPARK_MASTER=local-cluster[2,2,2048] (VERDICT r16 item 3): run the
+    // WHOLE declared suite on a real multi-process standalone master —
+    // separate executor JVMs, isLocal=false — so every custom Aggregator
+    // buffer encoder, codegen expression, and broadcast crosses a real
+    // executor boundary (single-JVM local[*] cannot surface serialization
+    // bugs). The invoking shell must set SPARK_SCALA_VERSION=2.13 and
+    // SPARK_HOME (the Spark distribution) for the worker's ExecutorRunner.
+    val spark = Session.builder("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // GRAFT_VERIFY_ONLY=q58_x,q59_y dumps a subset (same knob shape as

@@ -168,8 +168,8 @@ object AbQueries {
            |       CAST(SUM(cent) AS DOUBLE)/1e2 AS total_value
            |FROM b GROUP BY 1,2,3 ORDER BY 1,2,3""".stripMargin)) { (s, d) =>
     // r19: persisted — the three rank calls and the final join otherwise
-    // each recompute the events scan + per-user agg (JobProfile: 27 jobs,
-    // the agg chain ~5×); the first rank call's bucket collect fills it
+    // each recompute the events scan + per-user agg (27 jobs, the agg
+    // chain ~5×); the first rank call's bucket collect fills it
     val m = perUser(s, d).select(col("user_id"), col("last_es"),
       col("freq"), col("cent")).persist()
     // monotone bounded coarsenings of each leading order key

@@ -92,7 +92,7 @@ object BasketQueries {
     // BOUNDED by the ≤63-brand contract (supports ≤63 rows, n_orders 1
     // row), yet the r18 tail attached them through 5 broadcast joins + a
     // broadcast'd Apriori mask — 24 jobs/query, with each broadcast build
-    // its own job (JobProfile: job-wall sum 4.1 s vs 3.0 s wall). The
+    // its own job (job-wall sum 4.1 s vs 3.0 s wall). The
     // bounded aggregates are collected off the cached mask frame instead
     // (two vocabulary-sized actions, the q115 posture this query already
     // holds for `brands`) and re-enter as LITERAL arrays indexed by bit

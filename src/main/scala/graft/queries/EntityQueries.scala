@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{DeclaredQuery, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Entity-resolution queries (SURVEY §2.13 X75) — the record-linkage
@@ -108,12 +109,10 @@ object EntityQueries {
     // a catalog that outgrows the bound fails loudly here rather than
     // silently melting the driver. Worst case inside the bound is ~8.4M
     // in-memory edit distances over short names — bounded CPU, no state.
-    val names = Tables.part(s, d).select(col("p_name")).distinct()
-      .collect().map(_.getString(0))
-    require(names.length <= 4096,
-      s"${names.length} distinct part names — driver-side clustering holds ≤ 4096")
+    val names = partNames(Tables.part(s, d))
     // blocking key = last token (same key the r17/r18 plans used; ≡ the
-    // oracle's split_part(p_name, ' ', 2) on two-token generator names)
+    // oracle's split_part(p_name, ' ', 2) on the two-token names
+    // partNames asserts)
     def lev(a: String, b: String): Int = {
       // unit-cost edit distance over UTF-16 code units — equal to Spark's
       // levenshtein() and DuckDB's on this BMP-only (ASCII) vocabulary
@@ -160,6 +159,22 @@ object EntityQueries {
     aliasDf.join(broadcast(rowCounts), "entity")
       .select(col("entity").as("canonical"), col("n_aliases"), col("n_rows"))
       .orderBy("canonical")
+  }
+
+  private val TwoTokens = "\\S+ \\S+".r
+
+  /** q125's distinct `p_name` vocabulary, ≤ 4096 names for the driver-side
+    * clustering. The blocking key (last token) equals the oracle's
+    * `split_part(p_name, ' ', 2)` only on two-token names, so any other
+    * shape fails here rather than silently mis-blocking. */
+  private[graft] def partNames(part: DataFrame): Array[String] = {
+    val names = graft.util.Bounded.rows(part.select(col("p_name")).distinct(),
+      4096, "q125 part-name vocabulary").map(_.getString(0))
+    val bad = names.filterNot(TwoTokens.matches)
+    require(bad.isEmpty, s"q125 part names ${bad.take(3).mkString("'", "', '", "'")} " +
+      "are not two single-space-separated tokens — the last-token blocking " +
+      "key would diverge from the oracle's split_part(p_name, ' ', 2)")
+    names
   }
 
   val all: Seq[DeclaredQuery] = Seq(q111, q125)

@@ -36,11 +36,13 @@ import org.apache.spark.sql.functions._
   * edge-build distinct/agg and the final ORDER BY. With ~50 plan nodes
   * total the lineage no longer needs checkpoint re-basing (the
   * ConnectedComponents lesson applied to UNBOUNDED iteration counts;
-  * 10 pinned rounds of 5-node subplans analyze in milliseconds). A
-  * general billion-edge PageRank keeps the shuffle plan — here the
-  * broadcast side is pinned by the query text itself. Results are
-  * bit-identical: the integer recurrence, join keys, and grouping are
-  * unchanged; only join strategy/partitioning moved.
+  * 10 pinned rounds of 5-node subplans analyze in milliseconds). The
+  * broadcast side is pinned by the query text itself; r19 then moved the
+  * whole recurrence to the driver (see q103), so no distributed PageRank
+  * remains — `operators/ConnectedComponents` is the engine's one
+  * distributed iterative operator. Results are bit-identical: the
+  * integer recurrence, join keys, and grouping are unchanged; only join
+  * strategy/partitioning moved.
   */
 object GraphQueries {
 
@@ -77,9 +79,9 @@ object GraphQueries {
     // r19: the graph AND the recurrence are pinned by the query text --
     // 2,000 nodes, three arithmetic edge rules, 10 rounds of integer
     // updates, at every sf -- so after r18 removed every per-round
-    // exchange, the remaining 2.3 s was pure driver-side AQE work:
-    // JobProfile showed 0.95 s in jobs vs 3.3 s wall, the re-planning of
-    // the residual plan after each of the 10 broadcast materializations
+    // exchange, the remaining 2.3 s was pure driver-side AQE work: 0.95 s
+    // in jobs vs 3.3 s wall, the re-planning of the residual plan after
+    // each of the 10 broadcast materializations
     // (the honest r18 "not yet optimized" item 2). The r18 scaladoc's own
     // argument -- "the broadcast side is pinned by the query text itself,
     // the q33 fixed-panel posture" -- carried to its end: a contract-
@@ -88,9 +90,10 @@ object GraphQueries {
     // nothing cached anywhere) with the IDENTICAL integers -- same edge
     // dedup, same src-degree division, same damp, dangling nodes get
     // damp(0) because their inflow slot stays 0 -- and planted as a
-    // literal frame; only the declared ORDER BY touches the cluster. A
-    // general billion-edge PageRank keeps the r18 superstep plan;
-    // nothing here depends on sfDir.
+    // literal frame; only the declared ORDER BY touches the cluster.
+    // Nothing here depends on sfDir, and no distributed PageRank path
+    // remains: a graph that is not query-pinned would need one built on
+    // the pattern of operators/ConnectedComponents.
     import s.implicits._
     val edges: Array[(Int, Int)] = (0 until N).iterator.flatMap { v =>
       Iterator((v, (v * 31 + 7) % N), (v, (v * 97 + 3) % N),

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.operators.ConnectedComponents
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Flood-vs-contraction measurement for connected components (VERDICT
@@ -18,12 +17,7 @@ import org.apache.spark.sql.functions._
   */
 object CcBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder("graft-ccbench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val diams = sys.env.getOrElse("GRAFT_CC_DIAMS", "1000,10000,100000,1000000")
       .split(",").map(_.trim.toLong).filter(_ > 0)

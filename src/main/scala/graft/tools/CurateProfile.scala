@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.pipeline.{CorpusDedup, Curation}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Stage attribution for the pipeline suite's curate shape (VERDICT r13
@@ -26,12 +26,7 @@ object CurateProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .appName("graft-curate-profile").getOrCreate()
+    val spark = graft.Session.builder("graft-curate-profile").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def cleanup(): Unit = {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic-data generator matching TESTDATA.md's shapes, for
@@ -74,11 +74,8 @@ object DataGen {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.map(_.toDouble).getOrElse(1.0)
     val outDir = if (args.length > 1) args(1) else s"testdata_gen/sf$sf"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-datagen").getOrCreate()
+    val spark = graft.Session.builder("graft-datagen")
+      .config("spark.sql.shuffle.partitions", "32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val nCust = (150000 * sf).toLong

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Plan audit: print formatted physical plans for the named queries (or a
   * default set) — used to check pushdown/broadcast/codegen per the scale
@@ -14,11 +13,7 @@ object Explain {
     val names = if (args.nonEmpty) args.toSeq
     else Seq("q02_filter", "q06_enrich_join", "q13_argmax_argmin",
       "q22_rollup_revenue", "q25_cosine_topk", "q27p_minhash_pairs")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(4, "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     names.foreach { n =>

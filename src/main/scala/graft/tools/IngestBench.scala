@@ -92,16 +92,13 @@ object IngestBench {
       dimensionality = "2D", targetSize = (rows, cols))
 
     def runAt(cpus: Int): Double = {
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
+      val spark = graft.Session.builder("graft-ingest-bench", cpus, Some(s"local[$cpus]"))
         // compressed DICOM expands ~30x in CPU terms at decode: the default
         // 128 MB binaryFile bin-packing puts the whole 56 MB corpus in ~11
         // partitions and starves the executor. Size scan partitions by
         // decode cost, not bytes — a few files per task.
         .config("spark.sql.files.maxPartitionBytes", 4L * 1024 * 1024)
         .config("spark.sql.files.openCostInBytes", 1L * 1024 * 1024)
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       val t0 = System.nanoTime()

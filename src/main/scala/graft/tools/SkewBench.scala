@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the skew levers on a deliberately pathological join: a fact
@@ -23,13 +22,7 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(20000000L)
     val buckets = if (args.length > 1) args(1).toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("graft-skewbench").getOrCreate()
+    val spark = graft.Session.builder("graft-skewbench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // 90% of fact rows hit key 0; the rest spread over 999 cold keys

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Text-side LSH audit: MinHash band bucket occupancy and the star-edge
@@ -17,12 +16,7 @@ import org.apache.spark.sql.functions._
 object TextLshAudit {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .appName("graft-text-lsh-audit").getOrCreate()
+    val spark = graft.Session.builder("graft-text-lsh-audit").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     println(f"${"corpus"}%-28s ${"docs"}%9s ${"buckets"}%9s ${"multi"}%8s " +
       f"${"p50"}%5s ${"p99"}%6s ${"max"}%8s ${"star_edges"}%11s")

@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** The one gate for driver-side materialization of a plan into a literal
   * frame (the "collected literal frames keep every join a broadcast"
@@ -18,10 +18,8 @@ object Bounded {
     * Catalyst sees a LocalRelation, so every later join against it is a
     * broadcast with no recomputation of the source plan. */
   def literalFrame(plan: DataFrame, cap: Int, what: String): DataFrame = {
-    val rows = plan.collect()
-    require(rows.length <= cap,
-      s"$what collected ${rows.length} rows, over its documented bound of " +
-        s"$cap — a literal frame must be broadcast-sized by construction")
+    val rows = fetch(plan, cap, what,
+      "a literal frame must be broadcast-sized by construction")
     plan.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), plan.schema)
   }
@@ -30,12 +28,18 @@ object Bounded {
     * derivation, loop bounds) under the same loud cap as
     * [[literalFrame]] — for sites that need the VALUES, not a
     * re-plantable frame. */
-  def rows(plan: DataFrame, cap: Int,
-           what: String): Array[org.apache.spark.sql.Row] = {
-    val rows = plan.collect()
+  def rows(plan: DataFrame, cap: Int, what: String): Array[Row] =
+    fetch(plan, cap, what,
+      "driver-side row sets must be bounded by construction")
+
+  /** At most `cap + 1` rows ever reach the driver: one row over the cap
+    * proves the violation. The failure message sizes the plan with a
+    * distributed count, which moves no rows to the driver. */
+  private def fetch(plan: DataFrame, cap: Int, what: String,
+                    why: String): Array[Row] = {
+    val rows = plan.limit(cap + 1).collect()
     require(rows.length <= cap,
-      s"$what collected ${rows.length} rows, over its documented bound of " +
-        s"$cap — driver-side row sets must be bounded by construction")
+      s"$what has ${plan.count()} rows, over its documented bound of $cap — $why")
     rows
   }
 }

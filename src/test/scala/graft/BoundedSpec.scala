@@ -25,6 +25,23 @@ class BoundedSpec extends SparkSpec {
     assert(e.getMessage.contains("100"))
   }
 
+  test("a cap violation fails having fetched at most cap + 1 rows") {
+    val produced = spark.sparkContext.longAccumulator("bounded rows produced")
+    val counted = udf { (id: Long) => produced.add(1); id }
+    val plan = spark.range(1000000L).select(counted(col("id")).as("id"))
+    Seq[(String, org.apache.spark.sql.DataFrame => Any)](
+      "million-row frame" -> (graft.util.Bounded.literalFrame(_, 10, "million-row frame")),
+      "million-row set" -> (graft.util.Bounded.rows(_, 10, "million-row set"))
+    ).foreach { case (what, collectCapped) =>
+      produced.reset()
+      val e = intercept[IllegalArgumentException](collectCapped(plan))
+      assert(e.getMessage.contains(what) && e.getMessage.contains("1000000"),
+        e.getMessage)
+      assert(produced.value <= 11,
+        s"$what: the plan produced ${produced.value} rows before the cap fired")
+    }
+  }
+
   test("benchmarkGramSet and quantizer collects enforce their bounds") {
     // centArray: a fake corpus-sized "centroid" frame must be rejected
     val fake = spark.range(70000).select(

@@ -2,7 +2,6 @@ package graft
 
 import java.io.{ByteArrayOutputStream, PrintStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.CheckpointShim
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,8 +31,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * The suite name carries "LocalCluster" so build.sbt's testGrouping
   * forks it into its own JVM: a JVM holds one SparkContext and every
   * other spec shares SparkSpec's local[4] session. Executors are separate
-  * processes and need the test classpath explicitly
-  * (`spark.executor.extraClassPath`); `local-cluster` is a public Spark
+  * processes and need the test classpath explicitly (`Session.builder`
+  * sets `spark.executor.extraClassPath`); `local-cluster` is a public Spark
   * master URL (used throughout Spark's own test suites), not an internal
   * API.
   */
@@ -41,26 +40,10 @@ class LocalClusterCkptSpec extends AnyFunSuite {
 
   test("auto checkpoints: warn-once local fallback without a dir, reliable " +
     "files with one, CC fixpoint on the cluster matches a driver union-find") {
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,2,1024]")
-      .appName("graft-localcluster-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // executors are separate JVMs: hand them this (forked test) JVM's
-      // classpath — all local paths on the same host — and the JDK-17
-      // add-opens flags spark-submit would normally inject
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions", Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar")
-        .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" "))
-      .getOrCreate()
+    // Session.builder hands the executor JVMs this (forked test) JVM's
+    // classpath and the JDK-17 add-opens on a local-cluster master
+    val spark = Session.builder("graft-localcluster-test", 4,
+      Some("local-cluster[2,2,1024]")).getOrCreate()
     try {
       val sc = spark.sparkContext
       sc.setLogLevel("ERROR")

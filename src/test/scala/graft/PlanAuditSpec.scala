@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.execution.window.WindowExec
 
 /** Institutionalizes the two 100 TB plan rules every declared query must
-  * hold (previously enforced by eye via tools/WindowAudit):
+  * hold (previously checked by eye with a one-off audit tool):
   *
   *  1. no WindowExec with an empty partition spec over a corpus-sized
   *     input — the single-reducer "No Partition Defined for Window" shape;

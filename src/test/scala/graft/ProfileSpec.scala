@@ -242,6 +242,18 @@ class ProfileSpec extends SparkSpec {
     assert(rows.map(_.getLong(2)).sum == total)
   }
 
+  test("q125 name shape: a non-two-token part name fails loudly at the site") {
+    import spark.implicits._
+    val ok = Seq("red box", "red box", "blue box").toDF("p_name")
+    assert(EntityQueries.partNames(ok).sorted.toSeq == Seq("blue box", "red box"))
+    Seq("big red box", "red box ").foreach { bad =>
+      val e = intercept[IllegalArgumentException] {
+        EntityQueries.partNames(Seq("red box", bad).toDF("p_name"))
+      }
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
   test("q126 pareto: frontier is non-dominated and dominates every other point") {
     val frontier = graft.queries.RelationalQueries.q126
       .build(spark, sf0001).collect()

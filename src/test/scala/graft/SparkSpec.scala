@@ -7,12 +7,7 @@ import org.scalatest.BeforeAndAfterAll
 /** Shared local session for all specs (one JVM-wide session — Spark startup
   * dominates test wall-clock otherwise). */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = Session.builder("graft-test", 4, Some("local[4]"))
     // Spark 4.1's checksummed checkpoint writer can deadlock state-store
     // commits under rapid micro-batches (executor tasks park forever in
     // ChecksumCancellableFSDataOutputStream.close while the checksum pool
