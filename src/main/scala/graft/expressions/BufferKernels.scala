@@ -2,7 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -18,9 +18,10 @@ import org.apache.spark.sql.types._
   * `containsNull=false` buffers keep the branch-free loop.
   */
 
-/** Native kernels for multi-megabyte tensor buffers (A4/T6/A7 fast paths).
+/** Native kernels for multi-megabyte tensor buffers (A4/T6/A7/T9 fast paths).
   *
-  * These replace the Scala-UDF kernels for the cache/serve hot path. A UDF
+  * These replace the Scala-UDF kernels for the cache/serve hot path, and
+  * `GaussianNoise` the interpreted `zip_with` seeded-noise formula. A UDF
   * over `array<float>` pays a full Catalyst→Scala conversion per call —
   * every element boxed into an object Seq — which at the reference's native
   * 256² cine geometry (19.6M floats per volume) means hundreds of MB of
@@ -29,7 +30,7 @@ import org.apache.spark.sql.types._
   * the UnsafeArrayData buffer in place — zero boxing, zero copies in, one
   * primitive-array copy out where an array is produced.
   *
-  * Arithmetic is bit-identical to the UDFs they replace (same loop, same
+  * Arithmetic is bit-identical to the code they replace (same loop, same
   * double-accumulation order), so oracle parity and cached fingerprints are
   * unaffected.
   */
@@ -161,6 +162,60 @@ case class ShiftScale(data: Expression, shift: Expression, scale: Expression)
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
     copy(data = newFirst, shift = newSecond, scale = newThird)
+}
+
+/** Seeded additive Gaussian noise (T9 `RandGaussianNoised`): x + σ·z per
+  * element, z ~ N(0,1) by Box–Muller over two uniforms drawn from
+  * xxhash64(key, i, seed) and xxhash64(key, i, seed + 1) — deterministic in
+  * (key, seed, element index). `keyHash` is `xxhash64(key)`, the hash state
+  * after the key argument: Spark hashes the key once per row (a null key is
+  * skipped, as `xxhash64` skips a null argument, so `keyHash` is never null)
+  * and the loop goes on from that state per element. A null buffer gives
+  * null. `StrictMath.log`, `Math.cos` and `Math.sqrt` are what Spark's
+  * interpreted `log`/`cos`/`sqrt` call, so the bits match that formula.
+  * CodegenFallback is fine: one eval call per row, primitive loop inside. */
+case class GaussianNoise(data: Expression, keyHash: Expression, sigma: Double, seed: Long)
+    extends BinaryExpression with CodegenFallback {
+
+  override def left: Expression = data
+  override def right: Expression = keyHash
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (data.dataType, keyHash.dataType) match {
+      case (ArrayType(FloatType, _), LongType) => TypeCheckResult.TypeCheckSuccess
+      case (d, k) => TypeCheckResult.TypeCheckFailure(
+        s"gaussian_noise expects (array<float>, bigint), got (${d.sql}, ${k.sql})")
+    }
+
+  private lazy val checkNulls =
+    data.dataType.asInstanceOf[ArrayType].containsNull
+
+  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
+  override def prettyName: String = "gaussian_noise"
+
+  override def nullSafeEval(d: Any, k: Any): Any = {
+    val a = d.asInstanceOf[ArrayData]
+    val keyHash = k.asInstanceOf[Long]
+    val n = a.numElements()
+    val out = new Array[Float](n)
+    var i = 0
+    while (i < n) {
+      if (checkNulls && a.isNullAt(i))
+        throw BufferKernels.nullElement(prettyName, i)
+      val h = XXH64.hashInt(i, keyHash)
+      // pmod(hash, 2^24) → (u + 1) / (2^24 + 2): uniform in (0, 1)
+      val u1 = (Math.floorMod(XXH64.hashLong(seed, h), 1L << 24).toDouble + 1.0) / ((1 << 24).toDouble + 2)
+      val u2 = (Math.floorMod(XXH64.hashLong(seed + 1, h), 1L << 24).toDouble + 1.0) / ((1 << 24).toDouble + 2)
+      val z = Math.sqrt(-2.0 * StrictMath.log(u1)) * Math.cos(2.0 * Math.PI * u2)
+      out(i) = (a.getFloat(i).toDouble + sigma * z).toFloat
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(data = newLeft, keyHash = newRight)
 }
 
 /** Sorted distinct rounded classes of a label buffer → array<int>. */

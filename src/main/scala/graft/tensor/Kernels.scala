@@ -107,9 +107,14 @@ object Kernels {
     * at native 256² cine geometry (19.6M floats/volume) the UDF path was
     * GC-bound. `Tensors.stats`/HOF intensity ops remain the right tool for
     * small arrays (vectors, shingles, per-order groups) where they stay
-    * inside the relational plan. Rule of thumb: HOFs under ~10k elements,
-    * kernels above. Same arithmetic as the UDFs these replaced — stats
-    * fingerprints and oracle parity unaffected.
+    * inside the relational plan. Size alone does not decide it: the
+    * per-element cost does. A cheap arithmetic lambda is fine as a HOF on a
+    * few thousand elements, but a hashing/transcendental one is not — the
+    * seeded-noise `zip_with` (two xxhash64, log, cos, sqrt per element) cost
+    * ~210 ns/px on 4,096-px slices against ~23 ns/px as a native kernel
+    * (perfbench kernel probe, local[4] on a 4-core Xeon). Whole served
+    * buffers go to kernels. Same arithmetic as the UDFs these
+    * replaced — stats fingerprints and oracle parity unaffected.
     */
   def bufferStats(data: Column): Column =
     ColumnShim.column(graft.expressions.BufferStats(ColumnShim.expression(data)))

@@ -1,7 +1,9 @@
 package graft.tensor
 
+import graft.expressions.GaussianNoise
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
 
 /** 5-D tensor support over the flat-buffer encoding (SURVEY §1.1):
   * a tensor column is `struct(shape: array<int>, data: array<float>)` with
@@ -12,10 +14,13 @@ import org.apache.spark.sql.functions._
   * strided gather. Semantics (which axis is channel/depth/time) are
   * unchanged.
   *
-  * Everything here is higher-order-function Column math — no UDFs — so the
-  * whole transform chain stays inside whole-stage codegen and distributes
-  * with zero serialization overhead. UDF kernels (warp/blur/reorient) live
-  * in Kernels.scala.
+  * Everything here is Column math — higher-order functions, no UDFs — so
+  * it distributes with zero serialization overhead. The HOFs do not stay
+  * inside whole-stage codegen: they are `CodegenFallback`, their lambdas
+  * interpreted per element, so they suit small arrays; whole-buffer ops on
+  * the serve path are native expressions (`gaussianNoise` here, the
+  * `expressions.BufferKernels` wrappers in Kernels.scala). UDF kernels
+  * (warp/blur/reorient) live in Kernels.scala.
   */
 object Tensors {
 
@@ -165,17 +170,13 @@ object Tensors {
 
   /** Seeded additive Gaussian noise (T9 `RandGaussianNoised`): per-element
     * normal via Box–Muller over two per-element hash uniforms — fully
-    * deterministic in (key, seed, element index). */
-  def gaussianNoise(t: Column, sigma: Double, key: Column, seed: Long): Column = {
-    val n = size(t("data"))
-    val noisy = zip_with(t("data"), sequence(lit(0), n - 1), (x, i) => {
-      val u1 = (pmod(xxhash64(key, i, lit(seed)), lit(1 << 24)).cast("double") + 1.0) / lit((1 << 24).toDouble + 2)
-      val u2 = (pmod(xxhash64(key, i, lit(seed + 1)), lit(1 << 24)).cast("double") + 1.0) / lit((1 << 24).toDouble + 2)
-      val z = sqrt(lit(-2.0) * log(u1)) * cos(lit(2.0 * math.Pi) * u2)
-      (x.cast("double") + lit(sigma) * z).cast("float")
-    })
-    tensor(t("shape"), noisy)
-  }
+    * deterministic in (key, seed, element index). A native kernel
+    * (`expressions.GaussianNoise`), not a HOF: the buffer is a whole served
+    * slice and the per-element hashing and transcendentals dominate (cost
+    * in the `Kernels.bufferStats` scaladoc). */
+  def gaussianNoise(t: Column, sigma: Double, key: Column, seed: Long): Column =
+    tensor(t("shape"), ColumnShim.column(GaussianNoise(
+      ColumnShim.expression(t("data")), ColumnShim.expression(xxhash64(key)), sigma, seed)))
 
   /** A7 present classes (`transforms/utils.py:136-141`) — as a real
     * array<int>, not the reference's joined-string workaround (SURVEY §1.2). */

@@ -4,8 +4,10 @@ import graft.pipeline._
 import graft.sources.Sources
 import graft.tensor.Tensors
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import scala.util.hashing.MurmurHash3
 
 class PipelineSpec extends SparkSpec {
 
@@ -129,12 +131,35 @@ class PipelineSpec extends SparkSpec {
     val a = p(cached).orderBy("file_id", "copy_nr").select(col("image.data")).collect().map(_.getSeq[Float](0))
     val b = p(cached).orderBy("file_id", "copy_nr").select(col("image.data")).collect().map(_.getSeq[Float](0))
     assert(a.toSeq == b.toSeq, "augmented serve must be reproducible")
+    // order-insensitive digest of the served buffers' raw float bits, pinned
+    // from the zip_with noise formula the native kernel replaced: the whole
+    // augmented chain must stay byte-identical
+    val digest = MurmurHash3.unorderedHash(a.toSeq.map(d =>
+      MurmurHash3.orderedHash(d.map(java.lang.Float.floatToRawIntBits))))
+    assert(digest == 640042606, s"served buffers drifted: digest $digest")
     assert(p(cached).count() == 16, "copies=1 doubles the stream")
     // epoch folds into the augmentation key → different draws per epoch
     val e1 = TransformPlanner.servePlan(aug, Seq("image"), Seq("label"), "file_id",
       augmented = true, epoch = 1L)(cached)
       .orderBy("file_id", "copy_nr").select(col("image.data")).collect().map(_.getSeq[Float](0))
     assert(a.toSeq != e1.toSeq, "augmentation draws must vary across epochs")
+  }
+
+  test("servePlan augmented default path plans no higher-order function") {
+    // the benchmark's serve shape: augmented, noise σ 0.05, blur σ 0.75,
+    // standardize; served from a parquet slice cache as DataModule does
+    val dir = Files.createTempDirectory("graftserve").resolve("cache").toString
+    TransformPlanner.cachePlan(cfg, Seq("image"), Seq("label"))(records)
+      .withColumn("file_id", concat_ws("-", col("subject_id"), col("frame_nr"), col("slice_nr")))
+      .write.parquet(dir)
+    val aug = cfg.copy(augment = AugmentConfig(enabled = true, noiseSigma = 0.05, blurSigma = 0.75))
+    val served = TransformPlanner.servePlan(aug, Seq("image"), Seq("label"), "file_id",
+      augmented = true)(spark.read.parquet(dir))
+    // HOFs are CodegenFallback: interpreted, per element, on every served pixel
+    val hofs = served.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(
+      _.collect { case h: HigherOrderFunction => h.prettyName }))
+    assert(hofs.isEmpty, s"interpreted per-element ops on the serve path: $hofs")
+    assert(served.count() == 8)
   }
 
   test("DatasetCacher: fingerprint identity + cache hit skip") {

@@ -365,23 +365,26 @@ class StreamingSpec extends SparkSpec {
     "leftOuter emits unmatched only after the watermark closes the interval") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val lIn = MemoryStream[(Timestamp, Long, String)]
-    val rIn = MemoryStream[(Timestamp, Long, String)]
-    val l = lIn.toDF().toDF("l_ts", "key", "l_payload")
-    val r = rIn.toDF().toDF("r_ts", "r_key", "r_payload")
-    def joined(jt: String) = StreamingOps.enrichStream(
-      l, "l_ts", "10 minutes", r, "r_ts", "10 minutes",
+    // one input pair per query: a MemoryStream drops the rows any reader
+    // commits, so two queries sharing one race for its data
+    val inputs = Seq.fill(2)(
+      (MemoryStream[(Timestamp, Long, String)], MemoryStream[(Timestamp, Long, String)]))
+    def feed(ls: (Timestamp, Long, String)*)(rs: (Timestamp, Long, String)*): Unit =
+      inputs.foreach { case (lIn, rIn) => lIn.addData(ls: _*); rIn.addData(rs: _*) }
+    def joined(jt: String, i: Int) = StreamingOps.enrichStream(
+      inputs(i)._1.toDF().toDF("l_ts", "key", "l_payload"), "l_ts", "10 minutes",
+      inputs(i)._2.toDF().toDF("r_ts", "r_key", "r_payload"), "r_ts", "10 minutes",
       col("key") === col("r_key"), lowerMs = 120000, upperMs = 120000,
       joinType = jt)
-    val q = joined("inner").writeStream.format("memory")
+    val q = joined("inner", 0).writeStream.format("memory")
       .queryName("enrich_inner").outputMode(OutputMode.Append()).start()
-    val qo = joined("leftOuter").writeStream.format("memory")
+    val qo = joined("leftOuter", 1).writeStream.format("memory")
       .queryName("enrich_outer").outputMode(OutputMode.Append()).start()
     try {
       // key 1: click 1 min after the impression (inside ±2 min);
       // key 2: follow-up 5 min later (outside); key 3: no right row at all
-      lIn.addData((ts(0), 1L, "imp1"), (ts(0), 2L, "imp2"), (ts(1), 3L, "imp3"))
-      rIn.addData((ts(1), 1L, "click1"), (ts(5), 2L, "late2"))
+      feed((ts(0), 1L, "imp1"), (ts(0), 2L, "imp2"), (ts(1), 3L, "imp3"))(
+        (ts(1), 1L, "click1"), (ts(5), 2L, "late2"))
       q.processAllAvailable(); qo.processAllAvailable()
       val inner = spark.table("enrich_inner").collect()
       assert(inner.length == 1 && inner(0).getAs[String]("l_payload") == "imp1"
@@ -390,12 +393,10 @@ class StreamingSpec extends SparkSpec {
       assert(spark.table("enrich_outer")
         .filter(col("r_payload").isNull).count() == 0)
       // push both watermarks far past the interval horizon
-      lIn.addData((ts(59), 9L, "wm"))
-      rIn.addData((ts(59), 9L, "wm"))
+      feed((ts(59), 9L, "wm"))((ts(59), 9L, "wm"))
       q.processAllAvailable(); qo.processAllAvailable()
       // second batch so the advanced watermark actually evicts/emits
-      lIn.addData((ts(59, 30), 9L, "wm2"))
-      rIn.addData((ts(59, 30), 9L, "wm2"))
+      feed((ts(59, 30), 9L, "wm2"))((ts(59, 30), 9L, "wm2"))
       q.processAllAvailable(); qo.processAllAvailable()
       val unmatched = spark.table("enrich_outer")
         .filter(col("r_payload").isNull)

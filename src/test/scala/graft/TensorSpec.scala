@@ -1,7 +1,7 @@
 package graft
 
 import graft.tensor.{AffineParams, Kernels, Tensors}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 class TensorSpec extends SparkSpec {
@@ -116,6 +116,67 @@ class TensorSpec extends SparkSpec {
     val sol = dataOf(mk(Seq(1, 1, 1, 1, 3), Seq(1f, 5f, 9f))
       .select(solarize(col("t"), 4.0, 1.0, col("key"), 1L).as("t")))
     assert(sol == Seq(1f, 4f, 0f)) // max=9: 5→4, 9→0
+  }
+
+  /** The zip_with formula `gaussianNoise` evaluated before it became a
+    * native kernel — the bitwise reference the kernel must reproduce. */
+  private def hofNoise(data: Column, sigma: Double, key: Column, seed: Long): Column = {
+    val n = size(data)
+    zip_with(data, sequence(lit(0), n - 1), (x, i) => {
+      val u1 = (pmod(xxhash64(key, i, lit(seed)), lit(1 << 24)).cast("double") + 1.0) / lit((1 << 24).toDouble + 2)
+      val u2 = (pmod(xxhash64(key, i, lit(seed + 1)), lit(1 << 24)).cast("double") + 1.0) / lit((1 << 24).toDouble + 2)
+      val z = sqrt(lit(-2.0) * log(u1)) * cos(lit(2.0 * math.Pi) * u2)
+      (x.cast("double") + lit(sigma) * z).cast("float")
+    })
+  }
+
+  /** raw float bits per row; a null element stays visible as None. */
+  private def bitsOf(df: DataFrame, c: String): Seq[Seq[Option[Int]]] =
+    df.select(c).collect().toSeq.map(r => r.getSeq[java.lang.Float](0).map(f =>
+      Option(f).map(v => java.lang.Float.floatToRawIntBits(v.floatValue))))
+
+  test("gaussianNoise kernel is bit-identical to the zip_with formula") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    val buffers = (0 until 24).map(_ => Array.fill(64 * 64)((rnd.nextGaussian() * 300).toFloat))
+    val base = buffers.zipWithIndex.map { case (b, i) => (i.toLong, s"subj${i % 5}-${i % 3}-${i % 8}", b) }
+      .toDF("id", "file_id", "data")
+    val keys = Seq(
+      // DataModule's augmentation key: file_id # copy_nr # epoch
+      "aug_key" -> concat_ws("#", col("file_id"), col("id") % 2, lit(3L)),
+      "int_key" -> col("id").cast("int"),
+      "long_key" -> (col("id") * 1000003L),
+      "null_key" -> when(col("id") % 3 === 0, lit(null).cast("string")).otherwise(col("file_id")))
+    val buffersOf = Seq(
+      "plain" -> col("data"),
+      // transform() types its output containsNull=true: the checked loop
+      "nullable_typed" -> transform(col("data"), x => x * 0.5f))
+    for ((kn, key) <- keys; (bn, data) <- buffersOf; (sigma, seed) <- Seq((0.05, 1001L), (2.5, -7L))) {
+      val df = base.select(key.as("key"), data.as("data"), typedLit(Seq(1, 1, 1, 64, 64)).as("shape"))
+      val out = df.select(
+        gaussianNoise(tensor(col("shape"), col("data")), sigma, col("key"), seed)("data").as("k"),
+        hofNoise(col("data"), sigma, col("key"), seed).as("h"))
+      val (k, h) = (bitsOf(out, "k"), bitsOf(out, "h"))
+      assert(k.map(_.size) == Seq.fill(24)(64 * 64))
+      assert(k == h, s"float bits differ from the zip_with formula ($kn, $bn, σ=$sigma, seed=$seed)")
+    }
+    // a null buffer stays null; an empty one stays empty (the formula's
+    // sequence(0, -1) counted down and padded two null elements instead)
+    val edge = Seq((1L, Array.empty[Float]), (2L, null)).toDF("key", "data")
+      .select(gaussianNoise(tensor(typedLit(Seq(1, 1, 1, 0, 0)), col("data")), 0.1, col("key"), 5L)("data").as("k"))
+      .collect().map(r => Option(r.getSeq[Float](0)))
+    assert(edge.toSeq == Seq(Some(Seq.empty[Float]), None))
+  }
+
+  test("gaussianNoise fails loudly on a null buffer element") {
+    import spark.implicits._
+    val withNull = Seq((1L, Seq(Some(1.0f), None))).toDF("key", "data")
+    val ex = intercept[Exception] {
+      withNull.select(gaussianNoise(tensor(typedLit(Seq(1, 1, 1, 1, 2)), col("data")),
+        0.1, col("key"), 5L)).collect()
+    }
+    assert(ex.getMessage.contains("null element") ||
+      Option(ex.getCause).exists(_.getMessage.contains("null element")))
   }
 
   test("affineResample: identity matrix reproduces the image") {
