@@ -168,8 +168,9 @@ object PipelineShapes {
       // kept feeds BOTH the decontamination probe and the final
       // anti-join — eagerly materialized so the dedup chain above it
       // computes once per run, not once per reference (the q115
-      // double-fill class; tools/CurateProfile r14: 48.5 -> 42.5 s at
-      // sf10, with keepBest itself 94% of the composed wall)
+      // double-fill class; measured r14: 48.5 -> 42.5 s at sf10, with
+      // keepBest itself 94% of the composed wall, BASELINE.md "Round-14
+      // addendum 3")
       val kept = dd.join(
         verdict.filter(col("kept")).select("doc_id"), "doc_id").persist()
       kept.count()

@@ -70,10 +70,7 @@ object Session {
     * ~1 MB rows (64² cine) and survive 32 concurrent tasks in one local
     * JVM; native 256² volumes are ~160 MB/row → batch 2 keeps a 4-task
     * local run inside a few GB. Call before scanning tensor-record parquet
-    * (DatasetCacher.load does this); `narrowRows` restores the default. */
-  def wideRows(spark: SparkSession, batch: Int = 8): Unit =
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", batch.toString)
-
-  def narrowRows(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "4096")
+    * (DatasetCacher.load does this). */
+  def wideRows(spark: SparkSession): Unit =
+    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "8")
 }

@@ -25,8 +25,10 @@ import org.apache.spark.sql.types._
   * over `array<float>` pays a full Catalyst→Scala conversion per call —
   * every element boxed into an object Seq — which at the reference's native
   * 256² cine geometry (19.6M floats per volume) means hundreds of MB of
-  * garbage per row and a GC-bound pipeline (measured: the 256² CacheBench
-  * spent most of its 4 cores collecting garbage). These expressions read
+  * garbage per row and a GC-bound pipeline (measured on the 256² cache
+  * benchmark, 4 cores: 0.060 subj/s with the UDFs, most of the cores
+  * collecting garbage, vs 0.376 with these kernels; BASELINE.md "Cache
+  * throughput at native resolution"). These expressions read
   * the UnsafeArrayData buffer in place — zero boxing, zero copies in, one
   * primitive-array copy out where an array is produced.
   *

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.CheckpointShim.unpersistCheckpoint
+import graft.util.Checkpoints.ckpt
 
 /** Distributed connected components by min-label propagation with pointer
   * jumping.
@@ -31,12 +32,11 @@ import org.apache.spark.sql.graftshim.CheckpointShim.unpersistCheckpoint
   * ran 2-4× faster contracted. The default since r14 is AUTO: one
   * edge-count probe picks contraction at or above [[AutoFloodMax]] sym
   * rows (it won or tied every measured graph there — see the table at
-  * the probe) and the flood (with the escalate-5 hybrid depth net)
+  * the probe) and [[flood]] (with the escalate-5 hybrid depth net)
   * below, where rounds are job-count-bound and the flood's one-action
-  * rounds win. `GRAFT_CC_ALGO=flood|contract|hybrid` (or the `algo`
-  * parameter) forces an arm. The fixed point is the same as plain
-  * propagation — every vertex labeled with its component's minimum
-  * id — so callers' oracles are unchanged.
+  * rounds win. The fixed point is the same as plain propagation — every
+  * vertex labeled with its component's minimum id — so callers' oracles
+  * are unchanged.
   *
   * Scale/cost: ONE Spark job per round. The neighbor-min frame is lazily
   * `persist`ed (both jump-join references resolve to the same
@@ -49,6 +49,15 @@ import org.apache.spark.sql.graftshim.CheckpointShim.unpersistCheckpoint
   * build side per key — AQE skew split territory, no driver state
   * anywhere. (Two-rounds-per-action fusion was measured in r11 and
   * rejected — see the loop comment.)
+  *
+  * Round checkpoints follow the shared [[graft.util.Checkpoints]] policy —
+  * local blocks on local masters, reliable `spark.checkpoint.dir` files on
+  * clusters (executor loss mid-fixpoint would otherwise kill the
+  * truncated-lineage rounds). Retired rounds delete their reliable files
+  * promptly via [[unpersistCheckpoint]]'s reliable branch. Measured
+  * local-mode cost of the reliable posture (200k-vertex star-chain graph,
+  * 15 flood rounds, local[32], /tmp dir; BASELINE.md "Round-15 addendum
+  * 5"): 1.20× wall per fixpoint.
   *
   * Reference provenance: the reference has no graph step; this serves the
   * near-dup cluster formation the training-pipeline brief adds (q39).
@@ -67,12 +76,12 @@ object ConnectedComponents {
     * that is still unconverged after [[EscalateAfter]] rounds has
     * demonstrated depth, and only then is the extra contraction paid. */
   private val EscalateAfter = 3
-  private val JumpsShallow = sys.env.get("GRAFT_CC_JUMPS").map(_.toInt).getOrElse(1)
-  private val JumpsDeep = sys.env.get("GRAFT_CC_JUMPS").map(_.toInt).getOrElse(3)
+  private val JumpsShallow = 1
+  private val JumpsDeep = 3
 
   /** Flood rounds before the hybrid hands the quotient graph to
-    * [[contract]] (GRAFT_CC_ESCALATE overrides). r12 shipped 8; r13
-    * lowered it to 5 after measuring the prelude's cost at sf10
+    * [[contract]]. r12 shipped 8; r13 lowered it to 5 after measuring
+    * the prelude's cost at sf10
     * (BASELINE r13): sf0.1 corpora converge in ≤5 rounds and still never
     * escalate, but every graph that outlives round 5 landed faster under
     * earlier contraction — natural sf10 ~29→26 s box-normalized, the
@@ -81,8 +90,7 @@ object ConnectedComponents {
     * before the quotient contracts). Pure contraction remains slightly
     * ahead on the deepest natural corpus (~22 s) but loses at the
     * driver's sf0.1 scale — the hybrid keeps both regimes. */
-  private val defaultEscalateRounds =
-    sys.env.get("GRAFT_CC_ESCALATE").map(_.toInt).getOrElse(5)
+  private val defaultEscalateRounds = 5
 
   /** AUTO-SELECT (VERDICT r13 item 3, default since r14): one cheap
     * edge-count probe decides the algorithm per invocation. Re-measured
@@ -104,34 +112,37 @@ object ConnectedComponents {
     * flood pay label-frame rounds per hop). The one measured exception
     * is the degenerate PURE PATH at 10⁶ hops (2M sym rows: flood 46.2 s
     * vs contract 49.9 s) — a topology LSH band graphs never produce
-    * (every bucket is a star); on such graphs auto picks the ~8% slower
-    * arm, and a deployment that runs CC over genuine deep paths should
-    * force GRAFT_CC_ALGO=hybrid, which hedges exactly that regime.
+    * (every bucket is a star); on such graphs the probe picks the ~8%
+    * slower arm, a known cost of deciding from the edge count alone.
     * Below ~4k rows both arms are pure job-count (the tie at sf0.1)
     * and the flood's one-action rounds beat contraction's three eager
     * checkpoints per round. AUTO therefore floods (with the escalate-5
     * depth net) under [[AutoFloodMax]] sym rows and contracts at or
     * above it. The probe
     * is one count on the caller-persisted edge frame — the rounds that
-    * follow scan it many times either way. GRAFT_CC_ALGO forces
-    * flood | contract | hybrid (the r13 default, probe-less). */
-  private val AutoFloodMax =
-    sys.env.get("GRAFT_CC_AUTO_MAX").map(_.toLong).getOrElse(4096L)
+    * follow scan it many times either way. */
+  private val AutoFloodMax = 4096L
 
-  /** Round-checkpoint strategy (VERDICT r14 item 4): the shared
-    * [[graft.util.Checkpoints]] policy — local blocks on local masters,
-    * reliable `spark.checkpoint.dir` files on clusters (executor loss
-    * mid-fixpoint would otherwise kill the truncated-lineage rounds) —
-    * with CC's spec'd `spark.graft.cc.checkpoint` conf honored ahead of
-    * the engine-wide key. Retired rounds delete their reliable files
-    * promptly via [[unpersistCheckpoint]]'s reliable branch. Measured
-    * local-mode cost of the reliable posture
-    * ([[graft.tools.CcCkptProbe]], 200k-vertex star-chain graph, 15
-    * flood rounds, local[32], /tmp dir): 1.20× wall per fixpoint. */
-  private def ckpt(df: DataFrame, eager: Boolean): DataFrame =
-    graft.util.Checkpoints.ckpt(df, eager, "spark.graft.cc.checkpoint")
+  /** Generic 1-hop warm start for [[minLabel]]: each vertex labeled
+    * min(self, direct neighbors) — one groupBy + left join. Isolated
+    * vertices keep their own id. See the `init` caveat on [[minLabel]]:
+    * measured r11, this buys at most one round and costs an eager
+    * checkpoint job, so it only pays when `sym` is already materialized
+    * AND the graph is shallow; the in-repo dedup chains use cold starts. */
+  def oneHopInit(vertices: DataFrame, idCol: String,
+                 sym: DataFrame, srcCol: String, dstCol: String,
+                 labelCol: String = "cluster_id"): DataFrame = {
+    val mins = sym.groupBy(col(srcCol).as("_i")).agg(min(col(dstCol)).as("_m"))
+    vertices.select(col(idCol))
+      .join(mins, col(idCol) === col("_i"), "left")
+      .select(col(idCol),
+        least(col(idCol), coalesce(col("_m"), col(idCol))).as(labelCol))
+  }
 
-  /** @param vertices one row per vertex
+  /** Connected components through the edge-count probe: [[contract]] at
+    * or above [[AutoFloodMax]] sym rows, [[flood]] below.
+    *
+    * @param vertices one row per vertex
     * @param idCol    vertex id column in `vertices` (orderable; min wins)
     * @param sym      SYMMETRIC edge list (caller unions both directions)
     * @param srcCol   edge source column in `sym`
@@ -155,53 +166,25 @@ object ConnectedComponents {
     *   warm labels are free-standing but who still need per-doc vertices.
     * @return (labels as (idCol, labelCol) DataFrame, rounds used)
     */
-  /** Generic 1-hop warm start for [[minLabel]]: each vertex labeled
-    * min(self, direct neighbors) — one groupBy + left join. Isolated
-    * vertices keep their own id. See the `init` caveat on [[minLabel]]:
-    * measured r11, this buys at most one round and costs an eager
-    * checkpoint job, so it only pays when `sym` is already materialized
-    * AND the graph is shallow; the in-repo dedup chains use cold starts. */
-  def oneHopInit(vertices: DataFrame, idCol: String,
-                 sym: DataFrame, srcCol: String, dstCol: String,
-                 labelCol: String = "cluster_id"): DataFrame = {
-    val mins = sym.groupBy(col(srcCol).as("_i")).agg(min(col(dstCol)).as("_m"))
-    vertices.select(col(idCol))
-      .join(mins, col(idCol) === col("_i"), "left")
-      .select(col(idCol),
-        least(col(idCol), coalesce(col("_m"), col(idCol))).as(labelCol))
-  }
-
-  /** @param algo "auto" (default: the edge-count probe above) |
-    *   "flood" (pure min-label flood) | "contract" (pure star
-    *   contraction) | "hybrid" (flood, escalating to contraction at
-    *   `escalateRounds` — the r13 default). Empty (the default) reads
-    *   GRAFT_CC_ALGO so deployments can force an arm without code. An
-    *   unknown EXPLICIT value throws; an unknown env value only warns
-    *   and runs auto — a stale/mistyped deployment env var must not
-    *   crash every CC-backed query (r14 review). */
   def minLabel(vertices: DataFrame, idCol: String,
                sym: DataFrame, srcCol: String, dstCol: String,
                labelCol: String = "cluster_id",
                maxIter: Int = 50,
-               init: Option[DataFrame] = None,
-               escalateRounds: Int = defaultEscalateRounds,
-               algo: String = ""): (DataFrame, Int) = {
-    val known = Set("auto", "flood", "contract", "hybrid")
-    val requested =
-      if (algo.nonEmpty) algo else sys.env.getOrElse("GRAFT_CC_ALGO", "auto")
-    val mode =
-      if (known.contains(requested)) requested
-      else if (algo.nonEmpty)
-        throw new IllegalArgumentException(s"unknown CC algorithm '$algo'")
-      else {
-        System.err.println(
-          s"[cc] unknown GRAFT_CC_ALGO '$requested' — running auto")
-        "auto"
-      }
-    if (mode == "contract" ||
-        (mode == "auto" && sym.count() >= AutoFloodMax))
-      return contract(vertices, idCol, sym, srcCol, dstCol, labelCol,
-        maxIter, init)
+               init: Option[DataFrame] = None): (DataFrame, Int) =
+    if (sym.count() >= AutoFloodMax)
+      contract(vertices, idCol, sym, srcCol, dstCol, labelCol, maxIter, init)
+    else flood(vertices, idCol, sym, srcCol, dstCol, labelCol, maxIter, init)
+
+  /** Min-label flood with pointer jumps, escalating to [[contract]] on
+    * the quotient graph after `escalateRounds` rounds (the hybrid;
+    * `Int.MaxValue` never escalates). Same parameters and fixpoint as
+    * [[minLabel]]. */
+  private[graft] def flood(vertices: DataFrame, idCol: String,
+                           sym: DataFrame, srcCol: String, dstCol: String,
+                           labelCol: String = "cluster_id",
+                           maxIter: Int = 50,
+                           init: Option[DataFrame] = None,
+                           escalateRounds: Int = defaultEscalateRounds): (DataFrame, Int) = {
     val spark = vertices.sparkSession
     val edges = sym.select(col(srcCol).as("_x"), col(dstCol).as("_nb"))
     // localCheckpoint truncates LINEAGE but its LogicalRDD CARRIES the
@@ -253,10 +236,9 @@ object ConnectedComponents {
     // component min labels itself, so the quotient's component min IS
     // the component min — fixpoint unchanged (spec-pinned). Shallow
     // graphs (every natural sf0.1 corpus: ≤ 5 rounds) never reach the
-    // switch. GRAFT_CC_ALGO=flood forces the pure flood.
-    val pureFlood = mode == "flood"
+    // switch.
     while (!converged && iter < maxIter) {
-      if (!pureFlood && iter == escalateRounds) {
+      if (iter == escalateRounds) {
         val quot = edges
           .join(labels.select(col("_id").as("_x"), col("_lbl").as("_lx")), Seq("_x"))
           .join(labels.select(col("_id").as("_nb"), col("_lbl").as("_ln")), Seq("_nb"))
@@ -319,8 +301,6 @@ object ConnectedComponents {
       // checkpoint blocks, and counts changed labels in one job
       val nextCk = ckpt(jumped, false)
       val changed = nextCk.filter(col("_lbl") =!= col("_old")).count()
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round ${iter + 1}: changed=$changed t=${System.nanoTime() / 1000000000L % 10000}")
       labelsCk = nextCk
       labels = rebase(nextCk).select("_id", "_lbl")
       // checkpoint blocks live on the RDD, not in the CacheManager —
@@ -342,8 +322,8 @@ object ConnectedComponents {
     * Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected Components
     * in MapReduce and Beyond", SoCC 2014), the escape hatch the
     * [[minLabel]] scaladoc has cited since r6 — built and measured in
-    * r12 (VERDICT item 6), selected via `GRAFT_CC_ALGO=contract`
-    * (default remains the flood). Same fixpoint: every vertex labeled
+    * r12 (VERDICT item 6), selected by [[minLabel]]'s edge-count probe
+    * at or above [[AutoFloodMax]] sym rows. Same fixpoint: every vertex labeled
     * with its component's minimum id, so callers' oracles are unchanged
     * (spec-pinned equal to the flood on chains, stars, and the full
     * MinHash corpus graph).
@@ -422,8 +402,6 @@ object ConnectedComponents {
         .transform(ckpt(_, true))
       val ss = rebase(ssCk)
       val nextSig = signature(ss)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc-contract] round ${iter + 1}: edges=${nextSig._1}")
       converged = nextSig == sig
       sig = nextSig
       edges = ss

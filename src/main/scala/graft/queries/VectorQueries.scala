@@ -141,8 +141,9 @@ object VectorQueries {
   private val lshDims = 64
   private val lshPlanes = 8 // 256 buckets — sized so sf0.01's 500 vectors
   // collide; at corpus scale raise planes (buckets ≈ corpus/expected-cands).
-  // tools/LshAudit measures bucket occupancy vs plane count at sf1+ — the
-  // knob is exercised, not just commented (BASELINE.md "LSH plane sizing").
+  // Bucket occupancy vs plane count was measured at sf1+ (BASELINE.md
+  // "LSH plane-count sizing": sf1's 20k vectors, 8 planes → max bucket
+  // 187, 10 planes → 76).
   // plane j, dim k sign: high bit of first md5 byte of "hp:j:k"
   private[graft] def lshSignsFor(planes: Int, dims: Int = lshDims): Seq[Seq[Int]] =
     (0 until planes).map { j =>
@@ -725,7 +726,8 @@ object VectorQueries {
     * the same p with no FP-at-the-boundary risk; the DuckDB oracle computes
     * it from COUNT(*) and substrings the same 20-bit signature. The [8,20]
     * cap is bench-scale — a 10⁹-vector deployment raises the ceiling
-    * (buckets ≈ corpus/occupancy), same knob, measured by tools/LshAudit.
+    * (buckets ≈ corpus/occupancy), same knob; occupancy per plane count
+    * is measured in BASELINE.md "LSH plane-count sizing".
     *
     * Scale shape: one scan computes the sign projections (codegen'd VecDot
     * folds), ONE hash-shuffle on bucket, an in-bucket self-join bounded by

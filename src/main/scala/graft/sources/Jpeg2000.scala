@@ -215,8 +215,6 @@ object Jpeg2000 {
       }
     }
 
-    private[sources] def debugState: (Long, Int, Int) = (c, a, ct)
-
     /** FLUSH (T.88 E.3.8) → the terminated segment bytes. */
     def finish(): Array[Byte] = {
       // SETBITS

@@ -137,8 +137,6 @@ object JpegLs {
       while (i < n) { v = (v << 1) | readBit(); i += 1 }
       v
     }
-    /** Byte offset of the next unread byte (for EOI validation). */
-    def bytePos: Int = pos
   }
 
   // --------------------------------------------- limited-length Golomb

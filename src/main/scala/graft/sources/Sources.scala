@@ -539,9 +539,4 @@ object Sources {
         }
       }
   }
-
-  /** Generic record sink hook: a foreachPartition writer over the tensor
-    * column — the documented extension point for further codecs. */
-  def foreachRecordSink(df: DataFrame)(write: Iterator[org.apache.spark.sql.Row] => Unit): Unit =
-    df.foreachPartition(write)
 }

@@ -11,13 +11,11 @@ import org.apache.spark.sql.DataFrame
   * loop checkpoint can instead go through `Dataset.checkpoint` onto the
   * reliable `spark.checkpoint.dir` store.
   *
-  * Resolution order for the mode (`auto` | `local` | `reliable`):
-  * an operator-specific conf key if the caller declares one (connected
-  * components keeps its spec'd `spark.graft.cc.checkpoint`), then the
-  * engine-wide `spark.graft.checkpoint`, then the `GRAFT_CC_CKPT` env,
-  * then `auto`. `auto` = reliable iff the master is non-local AND a
-  * checkpoint dir is set; a non-local master WITHOUT a dir warns once
-  * and stays local rather than failing every iterative query.
+  * The mode (`auto` | `local` | `reliable`) is the deployment's
+  * `spark.graft.checkpoint` conf, else `auto`. `auto` = reliable iff the
+  * master is non-local AND a checkpoint dir is set; a non-local master
+  * WITHOUT a dir warns once and stays local rather than failing every
+  * iterative query.
   *
   * The reliable arm is ALWAYS eager: a lazy `Dataset.checkpoint`
   * materializes at the caller's action and then RECOMPUTES the whole
@@ -26,8 +24,9 @@ import org.apache.spark.sql.DataFrame
   * reliable checkpoint goes through
   * [[org.apache.spark.sql.graftshim.CheckpointShim.unpersistCheckpoint]],
   * whose reliable branch deletes the rdd-<id> files promptly. Measured
-  * local-mode cost of the reliable posture:
-  * [[graft.tools.CcCkptProbe]] — 1.20x per CC fixpoint.
+  * local-mode cost of the reliable posture (200k-vertex star-chain CC
+  * graph, 15 flood rounds, local[32]; BASELINE.md "Round-15 addendum 5"):
+  * 1.20x per CC fixpoint.
   */
 object Checkpoints {
 
@@ -38,19 +37,15 @@ object Checkpoints {
     * suite order. */
   private[graft] def resetWarnForTest(): Unit = warnedNoDir.set(false)
 
-  def ckpt(df: DataFrame, eager: Boolean, specificKey: String = ""): DataFrame = {
+  def ckpt(df: DataFrame, eager: Boolean): DataFrame = {
     val sc = df.sparkSession.sparkContext
-    val conf = df.sparkSession.conf
-    val mode = (if (specificKey.nonEmpty) conf.getOption(specificKey) else None)
-      .orElse(conf.getOption("spark.graft.checkpoint"))
-      .getOrElse(sys.env.getOrElse("GRAFT_CC_CKPT", "auto"))
+    val mode = df.sparkSession.conf.get("spark.graft.checkpoint", "auto")
     // ADVICE r15: an unrecognized mode (a typo'd 'relaible') must not fall
     // into the auto branch silently — a cluster deployment that intended
     // the reliable posture would run lost-executor-fatal local checkpoints
     require(Set("auto", "local", "reliable")(mode),
-      s"unrecognized checkpoint mode '$mode' (from " +
-        s"${if (specificKey.nonEmpty) s"$specificKey/" else ""}spark.graft.checkpoint/" +
-        "GRAFT_CC_CKPT) — expected one of: auto, local, reliable")
+      s"unrecognized checkpoint mode '$mode' (from spark.graft.checkpoint) " +
+        "— expected one of: auto, local, reliable")
     val reliable = mode match {
       case "reliable" =>
         require(sc.getCheckpointDir.isDefined,

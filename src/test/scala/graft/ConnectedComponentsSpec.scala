@@ -65,11 +65,11 @@ class ConnectedComponentsSpec extends SparkSpec {
     val edges = spark.createDataFrame(chain).toDF("a", "b")
     val sym = edges.select(col("a").as("x"), col("b").as("nb"))
       .unionByName(edges.select(col("b").as("x"), col("a").as("nb")))
-    // algo pinned to the hybrid: this guard is about the FLOOD loop's
-    // per-round stats (auto would hand this ≥4096-edge graph straight
-    // to contraction and skip the loop under test)
-    val (labels, rounds) = ConnectedComponents.minLabel(
-      spark.range(n).toDF("id"), "id", sym, "x", "nb", algo = "hybrid")
+    // the flood arm called directly: this guard is about the FLOOD loop's
+    // per-round stats (minLabel's probe would hand this ≥4096-edge graph
+    // straight to contraction and skip the loop under test)
+    val (labels, rounds) = ConnectedComponents.flood(
+      spark.range(n).toDF("id"), "id", sym, "x", "nb")
     assert(labels.filter(col("cluster_id") =!= 0L).count() == 0)
     assert(rounds >= 6, s"a 5000-chain should need many doubling rounds, got $rounds")
     val size = labels.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -115,14 +115,12 @@ class ConnectedComponentsSpec extends SparkSpec {
       .unionByName(edges.select(col("b").as("x"), col("a").as("nb")))
     val vertices = spark.range(n).toDF("id")
     val (auto, _) = ConnectedComponents.minLabel(
-      vertices, "id", sym, "x", "nb") // default algo = auto
+      vertices, "id", sym, "x", "nb")
     val (forced, _) = ConnectedComponents.contract(
       vertices, "id", sym, "x", "nb")
     assert(auto.filter(col("cluster_id") =!= 0L).count() == 0)
     assert(forced.except(auto).count() == 0 && auto.except(forced).count() == 0,
       "auto's fixpoint must equal forced contraction's")
-    intercept[IllegalArgumentException](ConnectedComponents.minLabel(
-      vertices, "id", sym, "x", "nb", algo = "nonsense"))
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
   }
 
@@ -177,9 +175,9 @@ class ConnectedComponentsSpec extends SparkSpec {
       .unionByName(edges.select(col("b").as("x"), col("a").as("nb")))
     val ids = (0L to 300L) ++ Seq(900L, 901L, 902L, 999L)
     val vertices = spark.createDataFrame(ids.map(Tuple1(_))).toDF("id")
-    val (hybrid, hRounds) = ConnectedComponents.minLabel(
+    val (hybrid, hRounds) = ConnectedComponents.flood(
       vertices, "id", sym, "x", "nb", escalateRounds = 2)
-    val (flood, fRounds) = ConnectedComponents.minLabel(
+    val (flood, fRounds) = ConnectedComponents.flood(
       vertices, "id", sym, "x", "nb", escalateRounds = Int.MaxValue)
     val h = hybrid.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val f = flood.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -206,13 +204,13 @@ class ConnectedComponentsSpec extends SparkSpec {
     val vertices = spark.range(201L).select(col("id"))
 
     clear()
-    val (flood, _) = ConnectedComponents.minLabel(
+    val (flood, _) = ConnectedComponents.flood(
       vertices, "id", sym, "x", "nb", escalateRounds = Int.MaxValue)
     assert(flood.filter(col("cluster_id") =!= 0L).count() == 0)
     assert(persisted() <= 1, s"flood leaked checkpoints: ${persisted()} persisted RDDs")
 
     clear()
-    val (hybrid, _) = ConnectedComponents.minLabel(
+    val (hybrid, _) = ConnectedComponents.flood(
       vertices, "id", sym, "x", "nb", escalateRounds = 2)
     assert(hybrid.filter(col("cluster_id") =!= 0L).count() == 0)
     assert(persisted() <= 1, s"hybrid leaked checkpoints: ${persisted()} persisted RDDs")
@@ -249,9 +247,9 @@ class ConnectedComponentsSpec extends SparkSpec {
       val vertices = spark.range(n).select(col("id"))
       def labelsOf(run: => (org.apache.spark.sql.DataFrame, Int)): Map[Long, Long] =
         run._1.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val flood = labelsOf(ConnectedComponents.minLabel(
+      val flood = labelsOf(ConnectedComponents.flood(
         vertices, "id", sym, "x", "nb", escalateRounds = Int.MaxValue))
-      val hybrid = labelsOf(ConnectedComponents.minLabel(
+      val hybrid = labelsOf(ConnectedComponents.flood(
         vertices, "id", sym, "x", "nb", escalateRounds = 1))
       val contr = labelsOf(ConnectedComponents.contract(
         vertices, "id", sym, "x", "nb"))
@@ -265,7 +263,7 @@ class ConnectedComponentsSpec extends SparkSpec {
 
   test("reliable checkpoints (non-local posture) reach the same fixpoint and retire their files") {
     // VERDICT r14 item 4: on a real cluster localCheckpoint is
-    // lost-executor-fatal mid-fixpoint; spark.graft.cc.checkpoint=reliable
+    // lost-executor-fatal mid-fixpoint; spark.graft.checkpoint=reliable
     // routes every round checkpoint through Dataset.checkpoint onto
     // spark.checkpoint.dir. Pin: identical labels to the local path on
     // the adversarial 64-chain graph through BOTH arms (flood-only and
@@ -280,17 +278,17 @@ class ConnectedComponentsSpec extends SparkSpec {
       .unionByName(edges.select(col("b").as("x"), col("a").as("nb")))
     val vertices = spark.range(64).select(col("id"))
     def run(): Map[Long, Long] = {
-      val flood = ConnectedComponents.minLabel(vertices, "id", sym, "x", "nb",
+      val flood = ConnectedComponents.flood(vertices, "id", sym, "x", "nb",
         escalateRounds = Int.MaxValue)._1
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val hybrid = ConnectedComponents.minLabel(vertices, "id", sym, "x", "nb",
+      val hybrid = ConnectedComponents.flood(vertices, "id", sym, "x", "nb",
         escalateRounds = 1)._1
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(flood == hybrid)
       flood
     }
     val local = run()
-    spark.conf.set("spark.graft.cc.checkpoint", "reliable")
+    spark.conf.set("spark.graft.checkpoint", "reliable")
     try {
       val reliable = run()
       assert(reliable == local, "reliable path must not change the fixpoint")
@@ -307,6 +305,6 @@ class ConnectedComponentsSpec extends SparkSpec {
       }
       assert(rddDirs <= 4,
         s"expected retired round checkpoints deleted, found $rddDirs rdd dirs")
-    } finally spark.conf.set("spark.graft.cc.checkpoint", "auto")
+    } finally spark.conf.set("spark.graft.checkpoint", "auto")
   }
 }

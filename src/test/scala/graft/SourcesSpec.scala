@@ -469,6 +469,24 @@ class SourcesSpec extends SparkSpec {
     assert(data == Seq(1f, 1f, 1f, 1f, 1f, 0f, 0f, 0f), "ED block then ES block")
   }
 
+  test("findFrameIndex: a duplicated frame gives the minimum frame_nr; an " +
+    "unmatched probe gives no row") {
+    // frames 0 and 2 carry the same buffer, so s0's probe (frame 2's
+    // content) must report frame 0; frame 1 is unique
+    def find(probe: org.apache.spark.sql.DataFrame): Seq[(String, Int)] =
+      Reformat.findFrameIndex(frames, "subject", "label", probe, "probe")
+        .orderBy("subject").collect().map(r => r.getString(0) -> r.getInt(1)).toSeq
+    val probes = frames
+      .filter((col("subject") === "s0" && col("frame_nr") === 2) ||
+        (col("subject") === "s1" && col("frame_nr") === 1))
+      .select(col("subject"), col("label").as("probe"))
+    assert(find(probes) == Seq("s0" -> 0, "s1" -> 1))
+    // three foreground pixels: no frame holds this buffer
+    val unmatched = spark.range(1).select(lit("s0").as("subject"),
+      Tensors.tensor(typedLit(Seq(1, 1, 1, 2, 2)), typedLit(Seq(1f, 1f, 1f, 0f))).as("probe"))
+    assert(find(unmatched).isEmpty)
+  }
+
   test("zoomsFromAffine recovers voxel spacing") {
     val affine = typedLit(Seq(2.0f, 0f, 0f, 0f, 3.0f, 0f, 0f, 0f, 8.0f))
     val z = spark.range(1).select(Reformat.zoomsFromAffine(affine).as("z"))

@@ -71,6 +71,21 @@ class TensorSpec extends SparkSpec {
     assert(dataOf(const.select(normalize(col("t"), 0, 1).as("t"))) == Seq(0f, 0f, 0f))
   }
 
+  test("scaleShift is (x·scale + shift).toFloat bit for bit; gamma clamps " +
+    "negatives to 0 before pow") {
+    val xs = Seq(-2.5f, -0.1f, 0f, 1e-3f, 0.3f, 1f / 3, 0.7f, 1f, 17.25f)
+    val base = mk(Seq(1, 1, 1, 1, xs.length), xs)
+    def bits(fs: Seq[Float]): Seq[Int] = fs.map(java.lang.Float.floatToRawIntBits)
+    val (scale, shift) = (0.1, 1.0 / 3)
+    assert(bits(dataOf(base.select(scaleShift(col("t"), lit(scale), lit(shift)).as("t")))) ==
+      bits(xs.map(x => (x.toDouble * scale + shift).toFloat)))
+    val g = 2.2
+    val gd = dataOf(base.select(gamma(col("t"), lit(g)).as("t")))
+    // unclamped, pow of a negative base to a fractional power is NaN
+    assert(bits(gd) == bits(xs.map(x => StrictMath.pow(math.max(x.toDouble, 0.0), g).toFloat)))
+    assert(gd.take(2) == Seq(0f, 0f))
+  }
+
   test("oneHot expands channel per block") {
     // T=1,D=2,C=1,H=1,W=2: labels [0,1, 2,0]
     val df = mk(Seq(1, 2, 1, 1, 2), Seq(0f, 1f, 2f, 0f))
