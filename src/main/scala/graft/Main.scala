@@ -5,7 +5,7 @@ import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Paths => JPaths}
+import java.nio.file.{Paths => JPaths}
 import scala.jdk.CollectionConverters._
 
 /** Config-driven entry point: the reference's user runs
@@ -39,15 +39,12 @@ import scala.jdk.CollectionConverters._
   *                 writes `output/ingest`
   *   - `dedupindex` — build + snapshot-commit the incremental-dedup
   *                 state (labels + band index) under `paths.state_dir`
-  *                 (pipeline/CorpusDedup.indexCorpus)
+  *                 (pipeline/CorpusDedup.writeState)
   *   - `dedupappend` — append `paths.incoming` to that state without
-  *                 re-clustering the corpus: quotient CC over touched
-  *                 components, scoped MERGEs of moved labels / improved
-  *                 buckets only (CorpusDedup.appendShard). With
-  *                 `--resume`, replays an append that crashed between
-  *                 its two MERGEs at O(shard): the labels head stamp
-  *                 names the torn shard (content token), and only the
-  *                 missing band-index MERGE is re-derived and applied
+  *                 re-clustering the corpus; with `--resume`, heal an
+  *                 append that crashed between its two MERGEs at
+  *                 O(shard) (CorpusDedup.appendState; the stamp format
+  *                 is CorpusDedup's "Stamp protocol")
   *   - `decontaminate` — flag `paths.documents` docs sharing any
   *                 word-13-gram with `paths.benchmarks`
   *                 (pipeline/Curation); writes `output/decontaminate`
@@ -103,38 +100,28 @@ object Main {
                            dataDir: Option[String],
                            indexDir: Option[String])
 
-  /** one extra scalar from the `paths:` section, for verbs with a single
-    * optional knob (compact's target size) — keeps IoPaths stable. */
-  def ioPathExtra(configPath: String, key: String): Option[String] = {
-    val yaml = new org.yaml.snakeyaml.Yaml(
-      new org.yaml.snakeyaml.constructor.SafeConstructor(
-        new org.yaml.snakeyaml.LoaderOptions()))
-    val root = Option(yaml.load[java.util.Map[String, Object]](
-      Files.readString(JPaths.get(configPath))))
-      .map(_.asScala.toMap).getOrElse(Map.empty[String, Object])
-    root.get("paths") match {
-      case Some(m: java.util.Map[_, _]) =>
-        m.asInstanceOf[java.util.Map[String, Object]].asScala.toMap
-          .get(key).map(_.toString).filter(_.nonEmpty)
-      case _ => None
-    }
-  }
+  /** Every command [[run]] accepts; the usage and unknown-command texts
+    * are built from it. */
+  private val Verbs = Seq("cache", "serve", "explore", "predict", "dedup",
+    "split", "score", "ingest", "dedupindex", "dedupappend", "decontaminate",
+    "annbuild", "annsearch", "compact", "upsert", "snapshot", "timetravel",
+    "cdc", "vacuum", "merge", "forget", "gate")
 
-  /** `paths` section of the same YAML GraftConfig.fromYaml reads (same
-    * SafeConstructor posture — YAML tags must not instantiate classes). */
-  def ioPaths(configPath: String): IoPaths = {
-    val yaml = new org.yaml.snakeyaml.Yaml(
-      new org.yaml.snakeyaml.constructor.SafeConstructor(
-        new org.yaml.snakeyaml.LoaderOptions()))
-    val root = Option(yaml.load[java.util.Map[String, Object]](
-      Files.readString(JPaths.get(configPath))))
-      .map(_.asScala.toMap).getOrElse(Map.empty[String, Object])
-    val p = root.get("paths") match {
+  /** one nested section of the root map (`paths:`, `ann:`); empty if absent */
+  private def section(root: Map[String, Object], name: String): Map[String, Object] =
+    root.get(name) match {
       case Some(m: java.util.Map[_, _]) =>
         m.asInstanceOf[java.util.Map[String, Object]].asScala.toMap
       case _ => Map.empty[String, Object]
     }
-    def s(k: String): Option[String] = p.get(k).map(_.toString).filter(_.nonEmpty)
+
+  /** one non-empty scalar of the `paths:` section */
+  private def pathKey(root: Map[String, Object])(key: String): Option[String] =
+    section(root, "paths").get(key).map(_.toString).filter(_.nonEmpty)
+
+  /** `paths` section of the config's root map. */
+  private def ioPaths(configPath: String, root: Map[String, Object]): IoPaths = {
+    val s = pathKey(root) _
     // default cache_root must be STABLE across invocations (the cache
     // command's contract is "build or hit an existing one"): a sibling
     // `.graft-cache` next to the config, not a fresh temp dir per run
@@ -154,9 +141,16 @@ object Main {
   /** Run one command; returns a small summary map (printed by main, and
     * asserted on by PipelineSpec's end-to-end test). */
   def run(spark: SparkSession, configPath: String, command: String): Map[String, String] = {
-    // lazy: the dedup command needs only `paths`, not a dataset config
-    lazy val cfg = GraftConfig.fromYaml(configPath)
-    val p = ioPaths(configPath)
+    // the YAML is parsed once: dataset sections → cfg, `paths` → p / extra
+    val root = GraftConfig.loadYaml(configPath)
+    val cfg = GraftConfig.fromMap(root)
+    val p = ioPaths(configPath, root)
+    // optional `paths:` scalars of single verbs — keeps IoPaths stable
+    val extra = pathKey(root) _
+    def stateDirFor(verb: String): String = extra("state_dir")
+      .orElse(p.output.map(_ + "/dedup_state"))
+      .getOrElse(throw new IllegalArgumentException(
+        s"$verb needs paths.state_dir (or paths.output)"))
     val imageCols = cfg.keyPairs.keys.toSeq.sorted
     val labelCols = cfg.keyPairs.values.filter(_ != "none").toSeq.distinct.sorted
 
@@ -318,160 +312,36 @@ object Main {
           "novel" -> counts.getOrElse("novel", 0L).toString)
 
       case "dedupindex" =>
-        // build + snapshot-commit the incremental-dedup state (VERDICT
-        // r14: CorpusDedup.indexCorpus as a production verb): labels
-        // (doc_id, cluster_id) clustered on doc_id so the per-shard
-        // MERGE prunes, and the band→min-id probe index keyed by a
-        // composite band_key for the same reason. paths.state_dir (or
-        // paths.output/dedup_state) is the state home.
+        // build + snapshot-commit the incremental-dedup state
+        // (CorpusDedup.writeState) under paths.state_dir (or
+        // paths.output/dedup_state)
         val docsPath = p.documents.getOrElse(throw new IllegalArgumentException(
           "dedupindex needs paths.documents (parquet with doc_id, text)"))
-        val stateDir = ioPathExtra(configPath, "state_dir")
-          .orElse(p.output.map(_ + "/dedup_state"))
-          .getOrElse(throw new IllegalArgumentException(
-            "dedupindex needs paths.state_dir (or paths.output)"))
-        val st = CorpusDedup.indexCorpus(spark.read.parquet(docsPath))
-        val ls = Snapshots.commit(spark, st.labels, s"$stateDir/labels",
-          overwrite = true, statsCol = Some("doc_id"), clustered = true,
-          files = 8, meta = "dedupindex")
-        // the bands stamp declares the labels version it pairs with from
-        // the very first commit — without it, a FIRST dedupappend that
-        // crashed between its two MERGEs would slip past the torn-state
-        // guard (bands meta would still read as the unversioned rebuild)
-        val bs = Snapshots.commit(spark,
-          st.bandIndex.withColumn("band_key",
-            concat(col("band_idx").cast("string"), lit(":"), col("band"))),
-          s"$stateDir/bands", overwrite = true,
-          meta = s"dedupindex:labels_v${ls.version}")
-        st.release()
+        val stateDir = stateDirFor("dedupindex")
+        val head = CorpusDedup.writeState(spark, stateDir,
+          spark.read.parquet(docsPath))
         val nDocs = Snapshots.read(spark, s"$stateDir/labels").count()
-        Map("docs" -> nDocs.toString,
-          "labels_version" -> ls.version.toString,
-          "bands_version" -> bs.version.toString)
+        head.versions + ("docs" -> nDocs.toString)
 
       case cmd @ ("dedupappend" | "dedupappend-resume") =>
-        // append a shard to the dedupindex state WITHOUT re-clustering
-        // the corpus (CorpusDedup.appendShard): quotient CC over touched
-        // components, then scoped MERGEs — only the moved components'
-        // label rows and the improved band buckets rewrite. The
-        // `--resume` CLI variant replays a crashed append at O(shard)
-        // (VERDICT r14 item 2) instead of the old O(corpus) rebuild.
-        val resume = cmd == "dedupappend-resume"
+        // append paths.incoming to the dedupindex state WITHOUT
+        // re-clustering the corpus; the `--resume` CLI variant heals an
+        // append that crashed between its two MERGEs at O(shard)
+        // (CorpusDedup.appendState)
         val incomingPath = p.incoming.getOrElse(throw new IllegalArgumentException(
           "dedupappend needs paths.incoming (the new shard parquet)"))
-        val stateDir = ioPathExtra(configPath, "state_dir")
-          .orElse(p.output.map(_ + "/dedup_state"))
-          .getOrElse(throw new IllegalArgumentException(
-            "dedupappend needs paths.state_dir (or paths.output)"))
-        val labelsT = s"$stateDir/labels"
-        val bandsT = s"$stateDir/bands"
-        val shard = spark.read.parquet(incomingPath)
-        // shard identity = content token fused with the row count (one
-        // scan — CorpusDedup.shardIdentity): every append stamps BOTH
-        // MERGEs with the token — the Delta txnAppId pattern — so a torn
-        // state names the shard that tore it and a replay of the same
-        // shard is recognizable
-        val (nShard, token) = CorpusDedup.shardIdentity(shard)
-        // torn-state guard (r14 review): the two MERGEs below cannot be
-        // atomic across tables, so every append stamps the bands table
-        // with the labels version it pairs with, and a new append REFUSES
-        // to run when the stamp disagrees — a crash between the two
-        // MERGEs is caught here on the next run instead of silently
-        // drifting the band minima
-        val curLabelsV = Snapshots.currentVersion(spark, labelsT)
-        val labelsMeta = Snapshots.commitMeta(spark, labelsT, curLabelsV)
-        val bandsMeta = Snapshots.commitMeta(spark, bandsT,
-          Snapshots.currentVersion(spark, bandsT))
-        val tag = ":labels_v"
-        val torn = if (bandsMeta.startsWith("dedupappend:") ||
-            bandsMeta.startsWith("dedupindex:")) {
-          // an unparseable stamp refuses rather than failing open — a
-          // safety guard must not treat a truncated/hand-edited stamp as
-          // permission to proceed (r14 review)
-          require(bandsMeta.contains(tag),
-            s"unparseable dedup state stamp '$bandsMeta' — rebuild with dedupindex")
-          val declared = bandsMeta.substring(
-            bandsMeta.lastIndexOf(tag) + tag.length).toLong
-          declared != curLabelsV
-        } else false
-        if (torn && !resume) throw new IllegalStateException(
-          "dedup state is torn: the bands table pairs with an older labels " +
-            s"version than v$curLabelsV — a previous dedupappend failed " +
-            "between its two MERGEs. Re-run THAT shard with " +
-            "`dedupappend --resume` (O(shard) recovery), or rebuild with " +
-            "dedupindex")
-        if (torn) {
-          // O(shard) recovery: the labels MERGE committed atomically, so
-          // labels are fully post-append; only the bands MERGE is
-          // missing. Replay is legal ONLY for the shard that tore the
-          // state (the labels head stamp names it); the payload is
-          // re-derived from the shard text against the still-unchanged
-          // bands table (CorpusDedup.bandDelta) — no CC, no corpus scan.
-          // startsWith: a STREAMED append (CorpusDedup.appendSink) stamps
-          // `dedupappend:<token>:batch:<app>:<id>` — same content token,
-          // so the CLI can also resume a stream-torn state
-          // ADVICE r16: r16 changed the token derivation (xxhash64 sum →
-          // SHA-256 sum/xor/count) AND its width (12 → 24 hex). A state
-          // torn by a PRE-r16 writer carries a 12-hex token no current
-          // binary can ever reproduce — retrying --resume with the same
-          // shard is guaranteed to fail forever, so say that instead of
-          // suggesting it. (Token width IS the format version: 12 = legacy
-          // xxhash64, 24 = current SHA-256-derived.)
-          val tornToken = labelsMeta.stripPrefix("dedupappend:").takeWhile(_ != ':')
-          // ADVICE r17: only a WELL-FORMED dedupappend meta whose token
-          // segment is 12 HEX chars is the legacy format — a foreign
-          // writer whose first colon-segment merely happens to be 12
-          // chars must fall through to the foreign-shard diagnostic
-          require(!(labelsMeta.startsWith("dedupappend:") &&
-              tornToken.length == 12 &&
-              // ASCII digits only — isDigit accepts any Unicode digit,
-              // which would misdiagnose a foreign token as legacy (ADVICE r18)
-              tornToken.forall(c => (c >= '0' && c <= '9') || ('a' to 'f').contains(c))),
-            s"torn state carries a LEGACY pre-r16 shard token '$tornToken' " +
-              "(12-hex xxhash64 format; current tokens are 24-hex " +
-              "SHA-256-derived) — no current binary can match it, so " +
-              "--resume cannot ever succeed: rebuild with dedupindex")
-          require(labelsMeta == s"dedupappend:$token" ||
-              labelsMeta.startsWith(s"dedupappend:$token:"),
-            s"torn state was left by shard '$labelsMeta', not this shard " +
-              s"('dedupappend:$token') — resume with that shard's parquet, " +
-              "or rebuild with dedupindex")
-          val bands = Snapshots.read(spark, bandsT)
-            .select("band_idx", "band", "ex_id")
-          val (n, _) = CorpusDedup.mergeBandDelta(spark, bandsT,
-            CorpusDedup.bandDelta(bands, shard),
-            s"dedupappend:$token$tag$curLabelsV")
-          Map("resumed" -> "true", "shard_docs" -> nShard.toString,
-            "labels_version" -> curLabelsV.toString,
-            "bands_upserted" -> n.toString)
-        } else if (resume && (labelsMeta == s"dedupappend:$token" ||
-            labelsMeta.startsWith(s"dedupappend:$token:"))) {
-          // both MERGEs landed before the crash — replay is a no-op
-          Map("resumed" -> "noop", "shard_docs" -> nShard.toString,
-            "labels_version" -> curLabelsV.toString, "bands_upserted" -> "0")
-        } else if (nShard == 0)
-          Map("shard_docs" -> "0", "labels_changed" -> "0",
-            "labels_version" -> curLabelsV.toString, "bands_upserted" -> "0",
-            "cc_rounds" -> "0")
-        else {
-          val state = CorpusDedup.DedupState(
-            Snapshots.read(spark, labelsT).select("doc_id", "cluster_id"),
-            Snapshots.read(spark, bandsT).select("band_idx", "band", "ex_id"))
-          val delta = CorpusDedup.appendShard(state, shard)
-          val changed = delta.changedLabels.persist()
-          val nChanged = changed.count()
-          val lv = Snapshots.upsert(spark, labelsT, changed, "doc_id",
-            meta = s"dedupappend:$token")
-          val (n, _) = CorpusDedup.mergeBandDelta(spark, bandsT, delta.changedIndex,
-            s"dedupappend:$token$tag${lv.version}")
-          changed.unpersist()
-          delta.release()
-          Map("shard_docs" -> nShard.toString,
-            "labels_changed" -> nChanged.toString,
-            "labels_version" -> lv.version.toString,
-            "bands_upserted" -> n.toString,
-            "cc_rounds" -> delta.rounds.toString)
-        }
+        val (out, nShard, head) = CorpusDedup.appendState(spark,
+          stateDirFor("dedupappend"), spark.read.parquet(incomingPath),
+          resume = cmd == "dedupappend-resume")
+        head.versions + ("shard_docs" -> nShard.toString) ++ (out match {
+          case CorpusDedup.Resumed(n) =>
+            Map("resumed" -> "true", "bands_upserted" -> n.toString)
+          case CorpusDedup.AlreadyApplied =>
+            Map("resumed" -> "noop", "bands_upserted" -> "0")
+          case CorpusDedup.Appended(changed, n, rounds) =>
+            Map("labels_changed" -> changed.toString,
+              "bands_upserted" -> n.toString, "cc_rounds" -> rounds.toString)
+        })
 
       case "decontaminate" =>
         // benchmark decontamination: flag paths.documents docs sharing any
@@ -504,17 +374,7 @@ object Main {
         val indexDir = p.indexDir.getOrElse(throw new IllegalArgumentException(
           "annbuild needs paths.index_dir"))
         // optional root-level `ann:` section overrides the index shape
-        val yaml = new org.yaml.snakeyaml.Yaml(
-          new org.yaml.snakeyaml.constructor.SafeConstructor(
-            new org.yaml.snakeyaml.LoaderOptions()))
-        val rootMap = Option(yaml.load[java.util.Map[String, Object]](
-          Files.readString(JPaths.get(configPath))))
-          .map(_.asScala.toMap).getOrElse(Map.empty[String, Object])
-        val ann = rootMap.get("ann") match {
-          case Some(m: java.util.Map[_, _]) =>
-            m.asInstanceOf[java.util.Map[String, Object]].asScala.toMap
-          case _ => Map.empty[String, Object]
-        }
+        val ann = section(root, "ann")
         def ai(k: String, dflt: Int): Int =
           ann.get(k).map(_.toString.toInt).getOrElse(dflt)
         // n_clusters 0 (the default) self-sizes to ≈√n at build time
@@ -549,7 +409,7 @@ object Main {
         // its CURRENT on-disk bytes (Sources.compact) — the pass every
         // long-lived table needs once incremental ingest sprays small
         // files. Target MB via paths.compact_target_mb (default 128).
-        val target = ioPathExtra(configPath, "compact_target_mb")
+        val target = extra("compact_target_mb")
           .map(_.toLong).getOrElse(128L) << 20
         val recordsPath = p.records.getOrElse(throw new IllegalArgumentException(
           "compact needs paths.records (an ingested parquet dataset)"))
@@ -563,10 +423,10 @@ object Main {
         // whose key range the updates touch are rewritten
         val recordsPath = p.records.getOrElse(throw new IllegalArgumentException(
           "upsert needs paths.records (a clustered parquet dataset)"))
-        val updatesPath = ioPathExtra(configPath, "updates")
+        val updatesPath = extra("updates")
           .getOrElse(throw new IllegalArgumentException(
             "upsert needs paths.updates (the rows to merge)"))
-        val key = ioPathExtra(configPath, "upsert_key").getOrElse("doc_id")
+        val key = extra("upsert_key").getOrElse("doc_id")
         val st = Sources.upsertClustered(
           spark, recordsPath, spark.read.parquet(updatesPath), key)
         Map("files_total" -> st.filesTotal.toString,
@@ -584,16 +444,16 @@ object Main {
         // read them as null — the r13 evolution path).
         val recordsPath = p.records.getOrElse(throw new IllegalArgumentException(
           "snapshot needs paths.records (the rows to commit)"))
-        val tablePath = ioPathExtra(configPath, "table")
+        val tablePath = extra("table")
           .getOrElse(throw new IllegalArgumentException(
             "snapshot needs paths.table (the snapshot table root)"))
-        val key = ioPathExtra(configPath, "snapshot_key")
-        val over = ioPathExtra(configPath, "snapshot_overwrite").contains("true")
+        val key = extra("snapshot_key")
+        val over = extra("snapshot_overwrite").contains("true")
         val st = Snapshots.commit(spark, spark.read.parquet(recordsPath),
           tablePath, overwrite = over, statsCol = key,
           clustered = key.nonEmpty,
-          files = ioPathExtra(configPath, "snapshot_files").map(_.toInt).getOrElse(0),
-          mergeSchema = ioPathExtra(configPath, "snapshot_merge_schema")
+          files = extra("snapshot_files").map(_.toInt).getOrElse(0),
+          mergeSchema = extra("snapshot_merge_schema")
             .contains("true"))
         Map("version" -> st.version.toString,
           "files_added" -> st.filesAdded.toString,
@@ -602,10 +462,10 @@ object Main {
       case "timetravel" =>
         // read paths.table at paths.snapshot_version (default: latest)
         // and write it to output/timetravel — the audit/rollback read
-        val tablePath = ioPathExtra(configPath, "table")
+        val tablePath = extra("table")
           .getOrElse(throw new IllegalArgumentException(
             "timetravel needs paths.table"))
-        val v = ioPathExtra(configPath, "snapshot_version")
+        val v = extra("snapshot_version")
           .map(_.toLong).getOrElse(-1L)
         val df = Snapshots.read(spark, tablePath, v)
         val rows = p.output match {
@@ -621,12 +481,12 @@ object Main {
       case "cdc" =>
         // row-level change feed of paths.table between paths.cdc_from and
         // paths.cdc_to (default: latest); writes output/cdc when set
-        val tablePath = ioPathExtra(configPath, "table")
+        val tablePath = extra("table")
           .getOrElse(throw new IllegalArgumentException("cdc needs paths.table"))
-        val from = ioPathExtra(configPath, "cdc_from")
+        val from = extra("cdc_from")
           .map(_.toLong).getOrElse(throw new IllegalArgumentException(
             "cdc needs paths.cdc_from (the base version)"))
-        val to = ioPathExtra(configPath, "cdc_to").map(_.toLong)
+        val to = extra("cdc_to").map(_.toLong)
           .getOrElse(Snapshots.currentVersion(spark, tablePath))
         val d = Snapshots.diff(spark, tablePath, from, to)
         val counts = d.groupBy("_op").count().collect()
@@ -642,11 +502,11 @@ object Main {
         // than paths.vacuum_orphan_age_ms (default 10 min — young
         // orphans may belong to an in-flight commit; pass 0 only in a
         // maintenance window with no live writers)
-        val tablePath = ioPathExtra(configPath, "table")
+        val tablePath = extra("table")
           .getOrElse(throw new IllegalArgumentException("vacuum needs paths.table"))
-        val keep = ioPathExtra(configPath, "vacuum_keep")
+        val keep = extra("vacuum_keep")
           .map(_.toInt).getOrElse(1)
-        val orphanAge = ioPathExtra(configPath, "vacuum_orphan_age_ms")
+        val orphanAge = extra("vacuum_orphan_age_ms")
           .map(_.toLong).getOrElse(600000L)
         val (manifests, files) =
           Snapshots.vacuum(spark, tablePath, keep, orphanMinAgeMs = orphanAge)
@@ -662,22 +522,22 @@ object Main {
         // burns no version, and reports the failed checks.
         val recordsPath = p.records.getOrElse(throw new IllegalArgumentException(
           "gate needs paths.records"))
-        val tablePath = ioPathExtra(configPath, "table")
+        val tablePath = extra("table")
           .getOrElse(throw new IllegalArgumentException("gate needs paths.table"))
-        val notNull = ioPathExtra(configPath, "gate_not_null")
+        val notNull = extra("gate_not_null")
           .map(_.split(",").map(_.trim).toSeq).getOrElse(Nil)
-        val unique = ioPathExtra(configPath, "gate_unique")
+        val unique = extra("gate_unique")
         val checks: Seq[(String, org.apache.spark.sql.Column)] =
           Seq("nonempty" -> (count(lit(1)) > 0)) ++
             notNull.map(c =>
               s"not_null:$c" -> (count(when(col(c).isNull, 1)) === 0)) ++
             unique.map(c =>
               s"unique:$c" -> (countDistinct(col(c)) === count(col(c)))).toSeq
-        val key = ioPathExtra(configPath, "snapshot_key")
+        val key = extra("snapshot_key")
         try {
           val st = Snapshots.commit(spark, spark.read.parquet(recordsPath),
             tablePath, statsCol = key, clustered = key.nonEmpty,
-            files = ioPathExtra(configPath, "snapshot_files")
+            files = extra("snapshot_files")
               .map(_.toInt).getOrElse(0),
             audit = checks)
           Map("published" -> "true", "version" -> st.version.toString,
@@ -696,15 +556,15 @@ object Main {
         // optimistic retry: racing writers serialize with no lost
         // update. If merge_key is the table's recorded stats key, pass
         // paths.merge_lo/merge_hi to also prune hit-file discovery.
-        val tablePath = ioPathExtra(configPath, "table")
+        val tablePath = extra("table")
           .getOrElse(throw new IllegalArgumentException("merge needs paths.table"))
-        val updatesPath = ioPathExtra(configPath, "updates")
+        val updatesPath = extra("updates")
           .getOrElse(throw new IllegalArgumentException("merge needs paths.updates"))
-        val key = ioPathExtra(configPath, "merge_key")
+        val key = extra("merge_key")
           .getOrElse(throw new IllegalArgumentException("merge needs paths.merge_key"))
         val prune = for {
-          lo <- ioPathExtra(configPath, "merge_lo").map(_.toDouble)
-          hi <- ioPathExtra(configPath, "merge_hi").map(_.toDouble)
+          lo <- extra("merge_lo").map(_.toDouble)
+          hi <- extra("merge_hi").map(_.toDouble)
         } yield (key, lo, hi)
         val st = Snapshots.upsert(spark, tablePath,
           spark.read.parquet(updatesPath), key, prune = prune,
@@ -721,12 +581,12 @@ object Main {
         // hits. If forget_column is the table's recorded stats key, the
         // value's range also prunes DISCOVERY to overlapping files.
         // Pre-delete versions remain time-travelable until `vacuum`.
-        val tablePath = ioPathExtra(configPath, "table")
+        val tablePath = extra("table")
           .getOrElse(throw new IllegalArgumentException("forget needs paths.table"))
-        val cName = ioPathExtra(configPath, "forget_column")
+        val cName = extra("forget_column")
           .getOrElse(throw new IllegalArgumentException(
             "forget needs paths.forget_column"))
-        val value = ioPathExtra(configPath, "forget_value")
+        val value = extra("forget_value")
           .getOrElse(throw new IllegalArgumentException(
             "forget needs paths.forget_value"))
         val keyed = Snapshots.manifest(spark, tablePath,
@@ -762,7 +622,7 @@ object Main {
           "files_kept" -> st.filesKept.toString)
 
       case other => throw new IllegalArgumentException(
-        s"unknown command '$other' — expected cache|serve|explore|predict|dedup|split|score|ingest|decontaminate|annbuild|annsearch|compact|upsert|snapshot|timetravel|cdc|vacuum|merge|forget|gate")
+        s"unknown command '$other' — expected ${Verbs.mkString("|")}")
     }
   }
 
@@ -770,7 +630,7 @@ object Main {
     require(args.length == 2 ||
       (args.length == 3 && args(1) == "dedupappend" && args(2) == "--resume"),
       "usage: graft.Main <data-config.yaml> " +
-        "<cache|serve|explore|predict|dedup|split|score|ingest|decontaminate|annbuild|annsearch|compact|upsert|snapshot|timetravel|cdc|vacuum|merge|forget|gate>" +
+        Verbs.mkString("<", "|", ">") +
         " (dedupappend also takes --resume)")
     val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -68,20 +68,10 @@ object PipelineShapes {
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       val corpus = Tables.documents(s, d)
         .filter(col("doc_id") % 17 =!= 0).select("doc_id", "text")
-      // the state lands as SNAPSHOT tables with the CLI verb's exact
-      // stamps (r15: was plain parquet) — the cold build this row prices
-      // is `graft.Main dedupindex`, and the committed/stamped tables are
-      // what p_dedup_append reads and p_dedup_stream copies
-      val st = CorpusDedup.indexCorpus(corpus)
-      val ls = graft.pipeline.Snapshots.commit(s, st.labels, s"$t/labels",
-        overwrite = true, statsCol = Some("doc_id"), clustered = true,
-        files = 8, meta = "dedupindex")
-      graft.pipeline.Snapshots.commit(s,
-        st.bandIndex.withColumn("band_key",
-          concat(col("band_idx").cast("string"), lit(":"), col("band"))),
-        s"$t/bands", overwrite = true,
-        meta = s"dedupindex:labels_v${ls.version}")
-      st.release()
+      // the cold build this row prices is `graft.Main dedupindex`: the
+      // stamped snapshot tables p_dedup_append reads and p_dedup_stream
+      // copies (CorpusDedup.writeState)
+      CorpusDedup.writeState(s, t, corpus)
       // the shard lands as its own table here (untimed relative to the
       // build): in production a shard ARRIVES as a table — carving it
       // from the corpus inside p_dedup_append would bill a full corpus

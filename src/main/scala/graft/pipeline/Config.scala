@@ -50,17 +50,21 @@ object GraftConfig {
 
   /** Parse the YAML file (snakeyaml ships with Spark's jars). Unknown keys
     * are ignored; missing keys take defaults — reproducing the reference's
-    * `allow_missing_keys` tolerance at the config level. SafeConstructor:
-    * only plain maps/lists/scalars are consumed, and the default
-    * constructor would instantiate arbitrary Java classes from YAML tags
-    * (an RCE vector for attacker-influenced config files). */
-  def fromYaml(path: String): GraftConfig = {
+    * `allow_missing_keys` tolerance at the config level. */
+  def fromYaml(path: String): GraftConfig = fromMap(loadYaml(path))
+
+  /** The YAML file's root map (empty for an empty file) — the one loader
+    * of config files. SafeConstructor: only plain maps/lists/scalars are
+    * consumed, and the default constructor would instantiate arbitrary
+    * Java classes from YAML tags (an RCE vector for attacker-influenced
+    * config files). */
+  def loadYaml(path: String): Map[String, Object] = {
     val yaml = new org.yaml.snakeyaml.Yaml(
       new org.yaml.snakeyaml.constructor.SafeConstructor(
         new org.yaml.snakeyaml.LoaderOptions()))
-    val root = yaml.load[java.util.Map[String, Object]](
-      Files.readString(Paths.get(path)))
-    fromMap(Option(root).map(_.asScala.toMap).getOrElse(Map.empty))
+    Option(yaml.load[java.util.Map[String, Object]](
+      Files.readString(Paths.get(path))))
+      .map(_.asScala.toMap).getOrElse(Map.empty[String, Object])
   }
 
   def fromMap(m: Map[String, Object]): GraftConfig = {

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.queries.TextQueries
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -102,8 +102,8 @@ object CorpusDedup {
     * independently re-shingled the corpus for each): the labels come out
     * checkpoint-backed (self-contained), the band index is one agg over
     * the cached band frame — which stays pinned until the caller
-    * materializes the index and calls [[DedupState.release]] (the CLI
-    * verb does; the bench harness clears caches between cells). */
+    * materializes the index and calls [[DedupState.release]]
+    * ([[writeState]] does). */
   def indexCorpus(docs: DataFrame): DedupState = {
     val dd = docs.select(col("doc_id"), col("text"))
     val bands = TextQueries.bandKeys(dd).persist()
@@ -303,17 +303,142 @@ object CorpusDedup {
       pinned = Seq(shardBands, touched, repLabels, sym))
   }
 
-  /** MERGE the band-index delta and stamp the guard meta, burning a
-    * version even when the delta is empty (an upsert with zero changed
-    * buckets burns no version, which would leave the stamp pointing at
-    * the PREVIOUS labels version — the torn-state guard's one false
-    * positive). Shared by the CLI verb, its `--resume` replay, and the
-    * streaming sink. Returns (rows touched, final bands version). */
-  private[graft] def mergeBandDelta(spark: org.apache.spark.sql.SparkSession,
-                                    bandsTable: String, delta: DataFrame,
-                                    stamp: String): (Long, Long) = {
-    val ci = delta.withColumn("band_key",
+  /** The composite MERGE key of the band index: `band_idx:band`, so a
+    * per-shard MERGE prunes on one column. */
+  private def withBandKey(bandIndex: DataFrame): DataFrame =
+    bandIndex.withColumn("band_key",
       concat(col("band_idx").cast("string"), lit(":"), col("band")))
+
+  /** Full state build under `stateDir` (the `dedupindex` verb and the
+    * `p_dedup_index` bench row): [[indexCorpus]], then the labels table
+    * (clustered on doc_id so the per-shard MERGE prunes), then the band
+    * index with its `band_key`, then [[DedupState.release]]. The bands
+    * stamp names the labels version it pairs with from the very first
+    * commit, so a crash inside the FIRST append is caught as torn too.
+    * Returns the new head. */
+  def writeState(spark: SparkSession, stateDir: String,
+                 docs: DataFrame): Head = {
+    val st = indexCorpus(docs)
+    val ls = Snapshots.commit(spark, st.labels, s"$stateDir/labels",
+      overwrite = true, statsCol = Some("doc_id"), clustered = true,
+      files = 8, meta = Stamp.Index)
+    val bandsStamp = Stamp.index(ls.version)
+    val bs = Snapshots.commit(spark, withBandKey(st.bandIndex),
+      s"$stateDir/bands", overwrite = true, meta = bandsStamp)
+    st.release()
+    Head(ls.version, Stamp.Index, bs.version, bandsStamp)
+  }
+
+  /** Stamp protocol — the one statement of the dedup-state stamp format.
+    * The state is two snapshot tables, `<stateDir>/labels` and
+    * `<stateDir>/bands`, kept current by a two-MERGE transaction (labels,
+    * then bands) that cannot be atomic across tables. Each commit's
+    * manifest meta carries a stamp, and the stamps alone detect and heal
+    * a crash between the two MERGEs:
+    *
+    *   - build ([[writeState]]): labels `dedupindex`, bands
+    *     `dedupindex:labels_v<V>` (V = the labels version it pairs with).
+    *   - CLI append ([[appendState]]): labels `dedupappend:<token>`,
+    *     bands `dedupappend:<token>:labels_v<V>`.
+    *   - stream append ([[appendSink]]): labels
+    *     `dedupappend:<token>:batch:<appId>:<batchId>` (the crash
+    *     identity plus the batch watermark this appId has reached),
+    *     bands as the CLI's.
+    *
+    * `<token>` is [[shardToken]]: 24 hex; 12 hex is the legacy pre-r16
+    * xxhash64 format, which no current binary reproduces, so a state it
+    * tore refuses with the `dedupindex` rebuild remedy. The state is TORN
+    * when a `dedup*` bands stamp names a labels version other than the
+    * labels head: the labels MERGE landed, the bands MERGE did not, and
+    * the labels head stamp names the shard that tore it. Either resume
+    * path (CLI `--resume`, a stream replay) accepts the other's stamp,
+    * since both start `dedupappend:<token>`. A bands `labels_v` or a
+    * batch id that does not parse refuses rather than failing open. */
+  private object Stamp {
+    val Index = "dedupindex"
+    private val Append = "dedupappend:"
+    private val LabelsTag = ":labels_v"
+    def index(labelsV: Long): String = s"$Index$LabelsTag$labelsV"
+    def labels(token: String, batch: Option[(String, Long)] = None): String =
+      Append + token + batch.fold("") { case (app, id) => s":batch:$app:$id" }
+    def bands(token: String, labelsV: Long): String =
+      s"$Append$token$LabelsTag$labelsV"
+
+    private def suffix(meta: String, tag: String): Long = {
+      val at = meta.lastIndexOf(tag)
+      val n = if (at < 0) None else meta.substring(at + tag.length).toLongOption
+      require(n.isDefined,
+        s"unparseable dedup state stamp '$meta' — rebuild with dedupindex")
+      n.get
+    }
+
+    def torn(bandsMeta: String, labelsV: Long): Boolean =
+      (bandsMeta.startsWith(Append) || bandsMeta.startsWith(s"$Index:")) &&
+        suffix(bandsMeta, LabelsTag) != labelsV
+
+    /** the labels stamp was written by an append of this shard */
+    def names(labelsMeta: String, token: String): Boolean =
+      labelsMeta == Append + token || labelsMeta.startsWith(s"$Append$token:")
+
+    /** the batch watermark `appId` has reached, -1 when it has none */
+    def lastBatch(labelsMeta: String, appId: String): Long = {
+      val tag = s":batch:$appId:"
+      if (labelsMeta.contains(tag)) suffix(labelsMeta, tag) else -1L
+    }
+
+    /** refuse a torn state this shard cannot heal */
+    def requireResumable(labelsMeta: String, token: String): Unit = {
+      val tornToken = labelsMeta.stripPrefix(Append).takeWhile(_ != ':')
+      // only a well-formed append stamp whose token is 12 ASCII hex chars
+      // is legacy: a foreign stamp falls through to the shard diagnostic
+      require(!(labelsMeta.startsWith(Append) && tornToken.length == 12 &&
+          tornToken.forall(c => (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f'))),
+        s"torn state carries a LEGACY pre-r16 shard token '$tornToken' " +
+          "(12-hex xxhash64 format; current tokens are 24-hex " +
+          "SHA-256-derived) — no current binary can match it, so " +
+          "--resume cannot ever succeed: rebuild with dedupindex")
+      require(names(labelsMeta, token),
+        s"torn state was left by shard '$labelsMeta', not this shard " +
+          s"('${Append}$token') — resume with that shard " +
+          "(`dedupappend --resume`, then restart any stream), or rebuild " +
+          "with dedupindex")
+    }
+  }
+
+  /** The state's table heads: each table's version and its stamp. */
+  final case class Head(labelsV: Long, labelsMeta: String,
+                        bandsV: Long, bandsMeta: String) {
+    /** the versions as the dedup verbs report them */
+    def versions: Map[String, String] = Map(
+      "labels_version" -> labelsV.toString, "bands_version" -> bandsV.toString)
+  }
+
+  private def readHead(spark: SparkSession, stateDir: String): Head = {
+    val (labelsT, bandsT) = (s"$stateDir/labels", s"$stateDir/bands")
+    val lv = Snapshots.currentVersion(spark, labelsT)
+    val bv = Snapshots.currentVersion(spark, bandsT)
+    Head(lv, Snapshots.commitMeta(spark, labelsT, lv),
+      bv, Snapshots.commitMeta(spark, bandsT, bv))
+  }
+
+  /** What one append step did to the state. */
+  sealed trait AppendOutcome
+  /** A torn state healed: only the missing band-index MERGE ran. */
+  final case class Resumed(bandsUpserted: Long) extends AppendOutcome
+  /** The shard was already applied: nothing ran. */
+  case object AlreadyApplied extends AppendOutcome
+  /** The full append ran (all zero, state untouched, for an empty shard). */
+  final case class Appended(labelsChanged: Long, bandsUpserted: Long,
+                            ccRounds: Int) extends AppendOutcome
+
+  /** MERGE the band-index delta and stamp it, burning a version even when
+    * the delta is empty (an upsert with zero changed buckets burns none,
+    * which would leave the stamp pointing at the PREVIOUS labels version —
+    * the torn-state guard's one false positive). Returns (rows touched,
+    * final bands version). */
+  private def mergeBandDelta(spark: SparkSession, bandsTable: String,
+                             delta: DataFrame, stamp: String): (Long, Long) = {
+    val ci = withBandKey(delta)
     val before = Snapshots.currentVersion(spark, bandsTable)
     val bv = Snapshots.upsert(spark, bandsTable, ci, "band_key", meta = stamp)
     val finalV =
@@ -323,152 +448,142 @@ object CorpusDedup {
     (bv.rowsUpdated + bv.rowsInserted, finalV)
   }
 
+  /** One append of `shard` (with its [[shardIdentity]]) to the state at
+    * `head` — the step the CLI verb and the streaming sink share. In
+    * order: a torn state refuses unless `resumeTorn`, else heals with the
+    * O(shard) [[bandDelta]] MERGE when this shard tore it; an `applied`
+    * shard is a no-op; otherwise [[appendShard]], the labels MERGE stamped
+    * `labelsStamp`, the bands MERGE stamped with the labels version it
+    * pairs with, and the release of everything the step pinned. State
+    * reads are pinned to the head versions. Returns the outcome and the
+    * new head. */
+  private def appendStep(spark: SparkSession, stateDir: String, head: Head,
+                         shard: DataFrame, nShard: Long, token: String,
+                         labelsStamp: String, resumeTorn: Boolean,
+                         applied: Boolean): (AppendOutcome, Head) = {
+    val (labelsT, bandsT) = (s"$stateDir/labels", s"$stateDir/bands")
+    def bands = Snapshots.read(spark, bandsT, version = head.bandsV)
+      .select("band_idx", "band", "ex_id")
+    if (Stamp.torn(head.bandsMeta, head.labelsV)) {
+      if (!resumeTorn) throw new IllegalStateException(
+        "dedup state is torn: the bands table pairs with an older labels " +
+          s"version than v${head.labelsV} — a previous dedupappend failed " +
+          "between its two MERGEs. Re-run THAT shard with " +
+          "`dedupappend --resume` (O(shard) recovery), or rebuild with " +
+          "dedupindex")
+      // the labels MERGE committed atomically, so labels are fully
+      // post-append; only the bands MERGE is missing, re-derived from the
+      // shard text against the unchanged bands — no CC, no corpus scan
+      Stamp.requireResumable(head.labelsMeta, token)
+      val stamp = Stamp.bands(token, head.labelsV)
+      val (n, bv) = mergeBandDelta(spark, bandsT, bandDelta(bands, shard), stamp)
+      (Resumed(n), head.copy(bandsV = bv, bandsMeta = stamp))
+    } else if (applied) (AlreadyApplied, head)
+    else if (nShard == 0) (Appended(0L, 0L, 0), head)
+    else {
+      val delta = appendShard(DedupState(
+        Snapshots.read(spark, labelsT, version = head.labelsV)
+          .select("doc_id", "cluster_id"), bands), shard)
+      // read by both MERGEs' lineage: computed once
+      val changed = delta.changedLabels.persist()
+      try {
+        val lv = Snapshots.upsert(spark, labelsT, changed, "doc_id",
+          meta = labelsStamp)
+        val stamp = Stamp.bands(token, lv.version)
+        val (n, bv) = mergeBandDelta(spark, bandsT, delta.changedIndex, stamp)
+        (Appended(lv.rowsUpdated + lv.rowsInserted, n, delta.rounds),
+          Head(lv.version, labelsStamp, bv, stamp))
+      } finally { changed.unpersist(); delta.release() }
+    }
+  }
+
+  /** One CLI append of `shard` to the state under `stateDir` (the
+    * `dedupappend` verb). A torn state refuses unless `resume`, which
+    * heals it when this shard tore it; under `resume`, a shard the labels
+    * head stamp already names is a recognized no-op. Returns the outcome,
+    * the shard's row count and the new head. */
+  def appendState(spark: SparkSession, stateDir: String, shard: DataFrame,
+                  resume: Boolean): (AppendOutcome, Long, Head) = {
+    val (nShard, token) = shardIdentity(shard)
+    val head = readHead(spark, stateDir)
+    val (out, next) = appendStep(spark, stateDir, head, shard, nShard, token,
+      Stamp.labels(token), resumeTorn = resume,
+      applied = resume && Stamp.names(head.labelsMeta, token))
+    (out, nShard, next)
+  }
+
   /** Exactly-once STREAMING shard ingest (VERDICT r14 item 5): a
     * `foreachBatch` function keeping a `dedupindex` state current as
-    * document shards arrive on a stream — [[appendShard]] composed with
-    * the [[Snapshots.batchSink]] txn guard, so N micro-batches end
-    * label-identical to one cold [[indexCorpus]] over the union
-    * (StreamingSpec pins this), and a recovery replay of an
-    * already-committed batch is a recognized no-op.
-    *
-    * Stamp protocol (one two-table transaction per batch):
-    *   - labels MERGE meta: `dedupappend:<token>:batch:<appId>:<id>` —
-    *     the shard's content token (crash identity) plus the batch
-    *     watermark this appId has reached (replay skip guard).
-    *   - bands MERGE meta: `dedupappend:<token>:labels_v<V>` — the
-    *     torn-state pairing stamp the CLI guard already checks.
+    * document shards arrive on a stream — the shared append step under
+    * the [[Snapshots.batchSink]] txn guard (the batch watermark in the
+    * labels stamp, see [[Stamp]]), so N micro-batches end label-identical
+    * to one cold [[indexCorpus]] over the union (StreamingSpec pins
+    * this), and a recovery replay of an already-committed batch is a
+    * recognized no-op.
     *
     * Crash windows, all healed by Structured Streaming's replay of the
     * in-flight batch: before MERGE 1 → nothing landed, the replay runs
-    * the full append; BETWEEN the MERGEs → the state is torn, the labels
-    * head stamp carries this batch's token, and the replay applies only
-    * the missing band-index MERGE ([[bandDelta]] — the same O(shard)
-    * recovery `dedupappend --resume` runs); after MERGE 2 → the batch
-    * watermark says done, the replay is a no-op. A torn state whose
-    * token does NOT match the replayed batch refuses loudly (it was torn
-    * by a different writer — the one-live-writer-per-table discipline
-    * was broken; recover via the CLI with that shard).
+    * the full append; BETWEEN the MERGEs → the state is torn and the
+    * replay applies only the missing band-index MERGE; after MERGE 2 →
+    * the batch watermark says done, the replay is a no-op. A state torn
+    * by a different shard refuses loudly (the one-live-writer-per-table
+    * discipline was broken; recover via the CLI with that shard).
     *
     * `appId` must be stable across restarts of the same query (the
     * batchSink contract). The state must exist (`dedupindex` first).
     *
-    * r16 (VERDICT r15 item 7): the head version/stamp probe is CACHED in
+    * r16 (VERDICT r15 item 7): the head versions and stamps are CACHED in
     * the closure across batches. Under the one-live-writer-per-table
-    * discipline this sink itself authored the head stamps after its
-    * first batch, so re-listing the manifest log and re-reading both
-    * meta files per batch (four fs round-trips whose listing cost grows
-    * with the version count — O(batches²) cumulative) only re-derives
-    * what the closure already knows; the state READS are pinned to the
-    * cached versions too, saving the re-listing inside each read. The
-    * cache is seeded from the log on the FIRST batch — a process-level
-    * restart builds a fresh closure, so torn-state detection reads disk
-    * truth exactly when a foreign writer's tear could have arrived;
-    * afterwards it is updated from this sink's own upsert results. If a
-    * caller reuses ONE closure across an in-JVM query restart, the
-    * replayed batch re-derives its deltas from the cached pre-crash
-    * versions and re-applies them — both MERGEs are idempotent by key at
-    * pinned inputs, so the heads converge to the same state the fresh-
-    * closure torn-heal path produces (StreamingSpec's torn-batch trials
-    * pin the fresh-closure path). The txn stamps are unchanged. */
+    * discipline this sink itself authored the heads after its first
+    * batch, so re-listing the manifest log and re-reading both meta files
+    * per batch (four fs round-trips whose listing cost grows with the
+    * version count — O(batches²) cumulative) only re-derives what the
+    * closure already knows; the state READS are pinned to the cached
+    * versions too. The cache is seeded from the log on the FIRST batch —
+    * a process-level restart builds a fresh closure, so torn-state
+    * detection reads disk truth exactly when a foreign writer's tear
+    * could have arrived; afterwards it is updated from this sink's own
+    * upsert results. If a caller reuses ONE closure across an in-JVM
+    * query restart, the replayed batch re-derives its deltas from the
+    * cached pre-crash versions and re-applies them — both MERGEs are
+    * idempotent by key at pinned inputs, so the heads converge to the
+    * state the fresh-closure torn-heal path produces. */
   def appendSink(stateDir: String, appId: String): (DataFrame, Long) => Unit = {
-    // (labels version, labels meta, bands version, bands meta) at the
-    // table heads; None until the first batch (or after a restart)
-    var head: Option[(Long, String, Long, String)] = None
-    // ADVICE r16: the cached head means torn-by-foreign-writer detection
-    // only runs on a closure's FIRST batch — a long-lived sink would mask
-    // an out-of-band CLI write (one-writer discipline broken) and keep
-    // merging against stale pinned versions, silently dropping that
-    // writer's rows from its view. Revalidate the cached bands version
-    // against disk truth every REVALIDATE_EVERY batches: the cost is one
-    // manifest listing per N batches (bounded, unlike the O(batches²)
-    // per-batch re-listing the cache removed), and a foreign advance
-    // fails LOUDLY within N batches instead of never.
+    var head: Option[Head] = None
+    // ADVICE r16: with a cached head, torn-by-foreign-writer detection
+    // would only run on a closure's FIRST batch — a long-lived sink would
+    // mask an out-of-band CLI write and keep merging against stale pinned
+    // versions. Revalidate the cached versions against disk truth every
+    // RevalidateEvery batches: one manifest listing per N batches, and a
+    // foreign advance fails LOUDLY within N batches instead of never.
     val RevalidateEvery = 16
     var sinceCheck = 0
     (df, batchId) =>
       require(!appId.contains(":"), s"appId must not contain ':': $appId")
       val spark = df.sparkSession
-      val labelsT = s"$stateDir/labels"
-      val bandsT = s"$stateDir/bands"
       // micro-batch frames are single-pass by contract; this one is read
       // several times (token, bands, quotient CC) — pin it for the batch
       val shard = df.select(col("doc_id"), col("text")).persist()
       try {
         val (nShard, token) = shardIdentity(shard)
-        if (head.isDefined) {
+        head.foreach { h =>
           sinceCheck += 1
           if (sinceCheck >= RevalidateEvery) {
             sinceCheck = 0
-            val diskB = Snapshots.currentVersion(spark, bandsT)
-            val diskL = Snapshots.currentVersion(spark, labelsT)
-            require(diskB == head.get._3 && diskL == head.get._1,
+            val diskB = Snapshots.currentVersion(spark, s"$stateDir/bands")
+            val diskL = Snapshots.currentVersion(spark, s"$stateDir/labels")
+            require(diskB == h.bandsV && diskL == h.labelsV,
               s"dedup state advanced by a FOREIGN writer (disk labels_v$diskL/" +
-                s"bands_v$diskB, this sink's cached labels_v${head.get._1}/" +
-                s"bands_v${head.get._3}) — the one-live-writer-per-table " +
+                s"bands_v$diskB, this sink's cached labels_v${h.labelsV}/" +
+                s"bands_v${h.bandsV}) — the one-live-writer-per-table " +
                 "discipline was broken; stop the other writer and restart " +
                 "this stream (the restart re-seeds from disk truth)")
           }
         }
-        val (curLabelsV, labelsMeta, curBandsV, bandsMeta) = head.getOrElse {
-          val lv = Snapshots.currentVersion(spark, labelsT)
-          val bv = Snapshots.currentVersion(spark, bandsT)
-          (lv, Snapshots.commitMeta(spark, labelsT, lv),
-            bv, Snapshots.commitMeta(spark, bandsT, bv))
-        }
-        val tag = ":labels_v"
-        val torn = (bandsMeta.startsWith("dedupappend:") ||
-            bandsMeta.startsWith("dedupindex:")) && {
-          require(bandsMeta.contains(tag),
-            s"unparseable dedup state stamp '$bandsMeta' — rebuild with dedupindex")
-          bandsMeta.substring(
-            bandsMeta.lastIndexOf(tag) + tag.length).toLong != curLabelsV
-        }
-        val bTag = s":batch:$appId:"
-        val lastBatch = if (labelsMeta.contains(bTag))
-          labelsMeta.substring(
-            labelsMeta.lastIndexOf(bTag) + bTag.length).toLong
-        else -1L
-        if (torn) {
-          // legacy-token recognition mirrors the CLI verb (ADVICE r16):
-          // a 12-hex token is the pre-r16 xxhash64 format no current
-          // binary can reproduce — only a dedupindex rebuild recovers it
-          val tornToken = labelsMeta.stripPrefix("dedupappend:").takeWhile(_ != ':')
-          // ADVICE r17: legacy detection requires a well-formed
-          // dedupappend meta AND a 12-HEX token (see Main's CLI twin)
-          require(!(labelsMeta.startsWith("dedupappend:") &&
-              tornToken.length == 12 &&
-              // ASCII digits only, matching the CLI twin (ADVICE r18)
-              tornToken.forall(c => (c >= '0' && c <= '9') || ('a' to 'f').contains(c))),
-            s"torn state carries a LEGACY pre-r16 shard token '$tornToken' " +
-              "(12-hex) — --resume can never match it; rebuild with dedupindex")
-          require(labelsMeta.startsWith(s"dedupappend:$token:") ||
-              labelsMeta == s"dedupappend:$token",
-            s"dedup state torn by a different shard ('$labelsMeta', this " +
-              s"batch 'dedupappend:$token') — recover it via " +
-              "`dedupappend --resume` with that shard, then restart the stream")
-          val bands = Snapshots.read(spark, bandsT, version = curBandsV)
-            .select("band_idx", "band", "ex_id")
-          val stamp = s"dedupappend:$token$tag$curLabelsV"
-          val (_, bv) = mergeBandDelta(spark, bandsT, bandDelta(bands, shard), stamp)
-          head = Some((curLabelsV, labelsMeta, bv, stamp))
-        } else if (batchId > lastBatch && nShard > 0) {
-          val state = DedupState(
-            Snapshots.read(spark, labelsT, version = curLabelsV)
-              .select("doc_id", "cluster_id"),
-            Snapshots.read(spark, bandsT, version = curBandsV)
-              .select("band_idx", "band", "ex_id"))
-          val delta = appendShard(state, shard)
-          val lMeta = s"dedupappend:$token$bTag$batchId"
-          val lv = Snapshots.upsert(spark, labelsT, delta.changedLabels,
-            "doc_id", meta = lMeta)
-          val bStamp = s"dedupappend:$token$tag${lv.version}"
-          val (_, bv) = mergeBandDelta(spark, bandsT, delta.changedIndex, bStamp)
-          delta.release()
-          head = Some((lv.version, lMeta, bv, bStamp))
-        } else {
-          // replayed/empty batch: heads untouched — cache what we read
-          head = Some((curLabelsV, labelsMeta, curBandsV, bandsMeta))
-        }
+        val h = head.getOrElse(readHead(spark, stateDir))
+        head = Some(appendStep(spark, stateDir, h, shard, nShard, token,
+          Stamp.labels(token, Some(appId -> batchId)), resumeTorn = true,
+          applied = batchId <= Stamp.lastBatch(h.labelsMeta, appId))._2)
       } finally shard.unpersist()
   }
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{DeclaredQuery, Tables}
 import graft.operators.Ranks
+import graft.pipeline.DataSplit
 import graft.util.Det
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -228,26 +229,10 @@ object RelationalQueries {
             |              THEN 'valid' ELSE 'train' END AS split
             |  FROM dev)
             |ORDER BY c_custkey""".stripMargin)) { (s, d) =>
-    val c = Tables.customer(s, d)
-    val wTest = Window.partitionBy(col("c_mktsegment"))
-      .orderBy(Det.seededKey("1234", col("c_custkey")), col("c_custkey"))
-    val ranked = c.withColumn("rk_test", row_number().over(wTest))
     val overlap = col("c_acctbal") < 0 && col("c_mktsegment").isin("BUILDING", "MACHINERY")
-    val kept = ranked.filter(!overlap)
-    val test = kept.filter(col("rk_test") <= 15)
-      .select(col("c_custkey"), lit("test").as("split"))
-    val dev = kept.filter(col("rk_test") > 15)
-    // global seeded rank, two-phase (Ranks): a bare Window.orderBy would
-    // serialize the whole dev set through one reducer at scale
-    val devKey = Det.seededKey("5678", col("c_custkey"))
-    val nDev = dev.agg(count(lit(1)).as("n_dev"))
-    val trainValid = Ranks.globalRowNumber(dev, Ranks.hexBucket(devKey),
-        Seq(devKey, col("c_custkey")), "rn")
-      .crossJoin(broadcast(nDev))
-      .select(col("c_custkey"),
-        when(col("rn") <= floor(col("n_dev").cast("double") * 0.2 + 0.5), "valid")
-          .otherwise("train").as("split"))
-    test.unionByName(trainValid).orderBy("c_custkey")
+    DataSplit.split(Tables.customer(s, d), "c_custkey", "c_mktsegment", 15, 0.2,
+        1234L, Some(overlap))
+      .select("c_custkey", "split").orderBy("c_custkey")
   }
 
   // ---------------------------------------------------------------- Q08

@@ -355,6 +355,45 @@ class AppendShardSpec extends SparkSpec {
       "the unfollowable retry advice must not be the remedy: " + e.getMessage)
   }
 
+  test("CLI + appendSink: a truncated or non-numeric stamp refuses as " +
+       "unparseable with the dedupindex remedy, not a bare NumberFormatException") {
+    val corpus = Seq((10L, textX), (20L, textZ)).toDF("doc_id", "text")
+    val shard = Seq((30L, textM)).toDF("doc_id", "text")
+    def mkRoot(): String = {
+      val root = Files.createTempDirectory("graft-badstamp").toString
+      corpus.write.parquet(s"$root/docs")
+      shard.write.parquet(s"$root/shard")
+      Files.writeString(java.nio.file.Paths.get(s"$root/config.yaml"),
+        s"""paths:
+           |  documents: $root/docs
+           |  incoming: $root/shard
+           |  state_dir: $root/state
+           |""".stripMargin)
+      Main.run(spark, s"$root/config.yaml", "dedupindex")
+      root
+    }
+    def assertUnparseable(e: IllegalArgumentException): Unit = {
+      assert(e.getMessage.contains("unparseable"), e.getMessage)
+      assert(e.getMessage.contains("dedupindex"), e.getMessage)
+    }
+    // a bands head stamp whose labels_v suffix is empty or not a number
+    for (bad <- Seq("dedupappend:tok:labels_v", "dedupindex:labels_v1x")) {
+      val root = mkRoot()
+      val bandsT = s"$root/state/bands"
+      Snapshots.commit(spark, Snapshots.read(spark, bandsT).limit(0), bandsT,
+        meta = bad)
+      assertUnparseable(intercept[IllegalArgumentException](
+        Main.run(spark, s"$root/config.yaml", "dedupappend")))
+    }
+    // a labels head stamp whose stream batch watermark is truncated
+    val root = mkRoot()
+    Snapshots.upsert(spark, s"$root/state/labels",
+      Seq((99L, 99L)).toDF("doc_id", "cluster_id"), "doc_id",
+      meta = "dedupappend:tok:batch:spec:")
+    assertUnparseable(intercept[IllegalArgumentException](
+      CorpusDedup.appendSink(s"$root/state", "spec")(shard, 0L)))
+  }
+
   test("appendSink: a FOREIGN writer's advance behind the cached head fails " +
        "loudly within the revalidation window (ADVICE r16)") {
     // The r16 head cache made torn-by-foreign-writer detection run only

@@ -336,6 +336,12 @@ class PipelineSpec extends SparkSpec {
     val bad = intercept[IllegalArgumentException](
       Main.run(spark, s"$root/config.yaml", "frobnicate"))
     assert(bad.getMessage.contains("unknown command"))
+    // the message lists every verb run accepts
+    val listed = bad.getMessage.split("expected ").last.split('|').toSet
+    assert(Set("cache", "serve", "explore", "predict", "dedup", "split",
+      "score", "ingest", "dedupindex", "dedupappend", "decontaminate",
+      "annbuild", "annsearch", "compact", "upsert", "snapshot", "timetravel",
+      "cdc", "vacuum", "merge", "forget", "gate").subsetOf(listed), listed)
 
     // non-identity scorer via config (the model plug-point): prediction :=
     // negated image. The inverse warp is linear in intensities, so the
